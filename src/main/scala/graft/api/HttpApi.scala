@@ -50,7 +50,12 @@ import graft.kernel.ConvertKernel.{ConversionConfig, ConversionResult}
   * FastAPI front-end — uploads are bounded by the same byte accounting
   * (UploadValidation), conversion runs through the same kernel, and the
   * async path hands off to the ledger that a Spark cluster drains. The
-  * HTTP layer holds no per-request state beyond the exchange.
+  * HTTP layer holds no per-request state beyond the exchange. Every
+  * accepted connection has TCP_NODELAY set, as uvicorn's asyncio
+  * transport does for the reference: the JDK server writes the headers
+  * and the body of a reply as two segments, and with Nagle's algorithm
+  * on, the body would wait for the client's delayed ACK of the headers
+  * (~40 ms on Linux) on every busy keep-alive connection.
   */
 object HttpApi {
 
@@ -174,6 +179,64 @@ object HttpApi {
     fields.result().mkString("{", ",", "}")
   }
 
+  // ---------------------------------------------------------- query string
+
+  /** The value of an ASCII hex digit byte, or -1. */
+  private def hexValue(b: Byte): Int = if (b >= 0) Character.digit(b.toChar, 16) else -1
+
+  /** One form-urlencoded component decoded as Python's `parse_qsl` does:
+    * `+` is a space, `%XX` with two ASCII hex digits is a byte, any other
+    * `%` (`%zz`, a trailing `%`) stays literal, and bytes that are not
+    * UTF-8 decode to U+FFFD. Never throws, unlike URLDecoder. Works on
+    * the UTF-8 bytes: `%`, `+` and hex digits never occur inside a
+    * multi-byte sequence. */
+  private def formDecode(s: String): String = {
+    val in = s.getBytes(StandardCharsets.UTF_8)
+    val out = new java.io.ByteArrayOutputStream(in.length)
+    var i = 0
+    while (i < in.length) {
+      if (in(i) == '+') {
+        out.write(' '); i += 1
+      } else if (in(i) == '%' && i + 2 < in.length &&
+                 hexValue(in(i + 1)) >= 0 && hexValue(in(i + 2)) >= 0) {
+        out.write(hexValue(in(i + 1)) * 16 + hexValue(in(i + 2))); i += 3
+      } else {
+        out.write(in(i)); i += 1
+      }
+    }
+    new String(out.toByteArray, StandardCharsets.UTF_8)
+  }
+
+  /** The raw query string (null when absent) as `name -> value`; the
+    * last value wins for a repeated name, like Starlette's QueryParams. */
+  private[api] def queryParams(rawQuery: String): Map[String, String] =
+    Option(rawQuery).getOrElse("").split("&").toSeq
+      .filter(_.contains("="))
+      .map { kv =>
+        val Array(k, v) = kv.split("=", 2)
+        formDecode(k) -> formDecode(v)
+      }.toMap
+
+  /** FastAPI Query(ge=1, le=4) semantics: out-of-range or non-integer
+    * params are a 422 validation error before the handler runs. */
+  private[api] def parseConfig(params: Map[String, String]): Either[String, ConversionConfig] = {
+    val extract = params.get("extract_tables_as_images")
+      .map(_.toLowerCase).map {
+        case "true" | "1" => Right(true)
+        case "false" | "0" => Right(false)
+        case other => Left(s"extract_tables_as_images: invalid boolean '$other'")
+      }.getOrElse(Right(false))
+    val scale = params.get("image_resolution_scale").map { s =>
+      s.toIntOption match {
+        case Some(n) if n >= 1 && n <= 4 => Right(n)
+        case Some(n) => Left(s"image_resolution_scale: $n not in [1, 4]")
+        case None => Left(s"image_resolution_scale: invalid integer '$s'")
+      }
+    }.getOrElse(Right(4))
+    for (e <- extract; sc <- scale)
+      yield ConversionConfig(extractTablesAsImages = e, imageResolutionScale = sc)
+  }
+
   // --------------------------------------------------------------- server
 
   /** A running API server bound to `port` (0 = ephemeral; read the actual
@@ -184,7 +247,18 @@ object HttpApi {
                      maxBatchMb: Int = UploadValidation.DefaultMaxBatchMb) {
 
     private val ledger = new JobService.Ledger(ledgerRoot)
-    private val http = HttpServer.create(new InetSocketAddress(port), 0)
+    private val http = {
+      // sendResponseHeaders flushes the status line and headers as their
+      // own segment and respond() writes the body as a second one; with
+      // Nagle's algorithm on, that second segment waits for the client's
+      // ACK of the first, which a Linux client in interactive mode delays
+      // by ~40 ms. The JDK reads this property once, when ServerConfig
+      // initialises at the first HttpServer.create in the JVM, so it must
+      // be set before that call; this class is the only code that
+      // creates one.
+      System.setProperty("sun.net.httpserver.nodelay", "true")
+      HttpServer.create(new InetSocketAddress(port), 0)
+    }
     private val pool = Executors.newFixedThreadPool(8)
     private val workers = Executors.newSingleThreadExecutor()
 
@@ -247,35 +321,6 @@ object HttpApi {
 
     private def detail(ex: HttpExchange, status: Int, msg: String): Unit =
       respond(ex, status, s"""{"detail":${jStr(msg)}}""")
-
-    private def queryParams(ex: HttpExchange): Map[String, String] =
-      Option(ex.getRequestURI.getRawQuery).getOrElse("").split("&").toSeq
-        .filter(_.contains("="))
-        .map { kv =>
-          val Array(k, v) = kv.split("=", 2)
-          java.net.URLDecoder.decode(k, "UTF-8") ->
-            java.net.URLDecoder.decode(v, "UTF-8")
-        }.toMap
-
-    /** FastAPI Query(ge=1, le=4) semantics: out-of-range or non-integer
-      * params are a 422 validation error before the handler runs. */
-    private def parseConfig(params: Map[String, String]): Either[String, ConversionConfig] = {
-      val extract = params.get("extract_tables_as_images")
-        .map(_.toLowerCase).map {
-          case "true" | "1" => Right(true)
-          case "false" | "0" => Right(false)
-          case other => Left(s"extract_tables_as_images: invalid boolean '$other'")
-        }.getOrElse(Right(false))
-      val scale = params.get("image_resolution_scale").map { s =>
-        s.toIntOption match {
-          case Some(n) if n >= 1 && n <= 4 => Right(n)
-          case Some(n) => Left(s"image_resolution_scale: $n not in [1, 4]")
-          case None => Left(s"image_resolution_scale: invalid integer '$s'")
-        }
-      }.getOrElse(Right(4))
-      for (e <- extract; sc <- scale)
-        yield ConversionConfig(extractTablesAsImages = e, imageResolutionScale = sc)
-    }
 
     /** Bounded body read — the server-edge twin of UploadValidation's
       * bounded reads: never buffer more than the endpoint's payload budget
@@ -391,7 +436,7 @@ object HttpApi {
     }
 
     private def syncConvert(ex: HttpExchange, batch: Boolean): Unit =
-      parseConfig(queryParams(ex)) match {
+      parseConfig(queryParams(ex.getRequestURI.getRawQuery)) match {
         case Left(msg) => detail(ex, 422, msg)
         case Right(config) =>
           validated(ex, batch).foreach { docs =>
@@ -409,7 +454,7 @@ object HttpApi {
       }
 
     private def submitJob(ex: HttpExchange, batch: Boolean): Unit =
-      parseConfig(queryParams(ex)) match {
+      parseConfig(queryParams(ex.getRequestURI.getRawQuery)) match {
         case Left(msg) => detail(ex, 422, msg)
         case Right(config) =>
           validated(ex, batch).foreach { docs =>

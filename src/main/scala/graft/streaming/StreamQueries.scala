@@ -156,18 +156,24 @@ object StreamQueries {
     * 1, a production stream at GBs per trigger fills the cores — the
     * same formula at both scales. Safe to derive per run because every
     * run starts a FRESH checkpoint (a restarted production stream keeps
-    * whatever its checkpoint pinned at first start). Conf
+    * whatever its checkpoint pinned at first start). An inbox that does
+    * not list as a local directory gets the core count. Conf
     * `graft.stream.parts` overrides. */
-  private def streamParts(s: SparkSession, inbox: String,
+  private[streaming] def streamParts(s: SparkSession, inbox: String,
                           filesPerTrigger: Int): Int =
     s.conf.getOption("graft.stream.parts").map(_.toInt).getOrElse {
-      val fs = Option(new java.io.File(inbox).listFiles())
-        .getOrElse(Array.empty[java.io.File])
-        .filter(_.getName.endsWith(".parquet"))
-      val perTrigger = fs.map(_.length()).sorted.reverse
-        .take(math.max(filesPerTrigger, 1)).sum
-      math.max(1, math.min(s.sparkContext.defaultParallelism,
-        (perTrigger / (4L << 20)).toInt + 1))
+      val cores = s.sparkContext.defaultParallelism
+      Option(new java.io.File(inbox).listFiles()) match {
+        // not a listable local directory (a glob, a nested layout, a
+        // remote path): the trigger size is unknown, so size for the
+        // cores rather than pin a fresh checkpoint to one partition
+        case None => cores
+        case Some(files) =>
+          val perTrigger = files.filter(_.getName.endsWith(".parquet"))
+            .map(_.length()).sorted.reverse
+            .take(math.max(filesPerTrigger, 1)).sum
+          math.max(1, math.min(cores, (perTrigger / (4L << 20)).toInt + 1))
+      }
     }
 
   /** Run `transform` over the staged inbox as a rate-limited AvailableNow

@@ -47,6 +47,40 @@ class HttpApiSpec extends SparkTestBase {
     client.send(HttpRequest.newBuilder(URI.create(base + path)).GET().build(),
       HttpResponse.BodyHandlers.ofString())
 
+  /** Reads one response (status line, headers, Content-Length body) off a
+    * raw connection, leaving the connection at the next response. */
+  private def readResponse(in: java.io.InputStream): (Int, String) = {
+    def line(): String = {
+      val sb = new StringBuilder
+      var c = in.read()
+      while (c != '\n') {
+        if (c < 0) throw new java.io.EOFException("connection closed mid-response")
+        if (c != '\r') sb.append(c.toChar)
+        c = in.read()
+      }
+      sb.toString
+    }
+    val status = line().split(" ")(1).toInt
+    var length = 0
+    var header = line()
+    while (header.nonEmpty) {
+      val colon = header.indexOf(':')
+      if (header.substring(0, colon).trim.equalsIgnoreCase("Content-Length"))
+        length = header.substring(colon + 1).trim.toInt
+      header = line()
+    }
+    (status, new String(in.readNBytes(length), StandardCharsets.UTF_8))
+  }
+
+  /** A raw client socket to the shared server, configured as a real
+    * client would be (TCP_NODELAY on, so its own requests never wait). */
+  private def rawSocket(): java.net.Socket = {
+    val sock = new java.net.Socket("127.0.0.1", server.boundPort)
+    sock.setTcpNoDelay(true)
+    sock.setSoTimeout(10000)
+    sock
+  }
+
   test("multipart parser: parts, filenames, binary-safe bodies") {
     val body = multipart(
       ("document", "a.md", "# Hi\r\nbody".getBytes(StandardCharsets.UTF_8)),
@@ -110,6 +144,27 @@ class HttpApiSpec extends SparkTestBase {
       multipart(("document", "a.md", "# A".getBytes(StandardCharsets.UTF_8))))
     assert(scale.statusCode() == 422)
     assert(scale.body().contains("not in [1, 4]"))
+
+    // a malformed escape stays literal, as with the reference's parse_qsl,
+    // so it reaches the 422 "invalid integer" path instead of a 500
+    assert(HttpApi.parseConfig(HttpApi.queryParams("image_resolution_scale=%zz")) ==
+      Left("image_resolution_scale: invalid integer '%zz'"))
+    assert(HttpApi.parseConfig(HttpApi.queryParams("image_resolution_scale=4%")) ==
+      Left("image_resolution_scale: invalid integer '4%'"))
+    assert(HttpApi.queryParams("a=x+y%20z&b=%E2%82%ac&c=%&d=%f&e=caf\u00e9%zz&f=%ff") ==
+      Map("a" -> "x y z", "b" -> "\u20ac", "c" -> "%", "d" -> "%f",
+        "e" -> "caf\u00e9%zz", "f" -> "\ufffd"))
+    assert(HttpApi.queryParams(null) == Map.empty)
+    // over the wire the JDK server refuses such a request line itself
+    // (it is not a valid java.net.URI) before the handler runs: never a 500
+    val sock = rawSocket()
+    try {
+      sock.getOutputStream.write(("POST /documents/convert?image_resolution_scale=%zz " +
+        "HTTP/1.1\r\nHost: 127.0.0.1\r\nContent-Length: 0\r\n\r\n")
+        .getBytes(StandardCharsets.US_ASCII))
+      val (status, body) = readResponse(sock.getInputStream)
+      assert(status == 400, body)
+    } finally sock.close()
 
     val missing = post("/documents/convert", multipart())
     assert(missing.statusCode() == 400)
@@ -225,6 +280,32 @@ class HttpApiSpec extends SparkTestBase {
     val ready = get("/health/ready")
     assert(ready.statusCode() == 200)
     assert(ready.body().contains(""""broker":"ok""""), ready.body())
+  }
+
+  test("keep-alive: back-to-back requests on one connection answer without a delayed-ACK stall") {
+    // the JDK server sends headers and body as two segments; unless the
+    // server socket has TCP_NODELAY, the body waits for the client's
+    // delayed ACK of the headers, ~40 ms on every request after the first
+    val sock = rawSocket()
+    try {
+      val in = new java.io.BufferedInputStream(sock.getInputStream)
+      val out = sock.getOutputStream
+      val request = "GET /health HTTP/1.1\r\nHost: 127.0.0.1\r\n\r\n"
+        .getBytes(StandardCharsets.US_ASCII)
+      val roundTripsMs = (1 to 20).map { _ =>
+        val t0 = System.nanoTime()
+        out.write(request)
+        out.flush()
+        val (status, body) = readResponse(in)
+        val ms = (System.nanoTime() - t0) / 1e6
+        assert(status == 200 && body == """{"status":"ok"}""", body)
+        ms
+      }
+      // the median, so that one GC pause cannot fail the test
+      val median = roundTripsMs.sorted.apply(roundTripsMs.size / 2)
+      assert(median < 20.0,
+        s"median round trip $median ms; all: ${roundTripsMs.map(m => f"$m%.2f").mkString(", ")}")
+    } finally sock.close()
   }
 
   test("CORS: wildcard default, configured origins echo + credentials") {

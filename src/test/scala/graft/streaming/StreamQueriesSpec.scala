@@ -9,6 +9,17 @@ import org.apache.spark.sql.functions._
   * This is the same rule the DuckDB oracle replays for the driver. */
 class StreamQueriesSpec extends SparkTestBase {
 
+  test("stream partitions: a small local inbox gets 1, an unlistable one the cores") {
+    val cores = spark.sparkContext.defaultParallelism
+    assert(cores > 1, "the fallback is only visible with more than one core")
+    val inbox = java.nio.file.Files.createTempDirectory("graft_inbox")
+    assert(StreamQueries.streamParts(spark, inbox.toString, 4) == 1) // empty
+    java.nio.file.Files.write(inbox.resolve("part-0.parquet"), new Array[Byte](1024))
+    assert(StreamQueries.streamParts(spark, inbox.toString, 4) == 1) // tiny
+    assert(StreamQueries.streamParts(spark, s"$inbox/*.parquet", 4) == cores) // glob
+    assert(StreamQueries.streamParts(spark, s"$inbox/missing", 4) == cores)
+  }
+
   test("st1 catch-up equals batch rollup over watermark-closed windows") {
     import spark.implicits._
     val streamed = StreamQueries.hourlyRollupCatchUp(spark, sfDir)
