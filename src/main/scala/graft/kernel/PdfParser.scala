@@ -567,29 +567,22 @@ object PdfParser extends FormatParser {
 
   /** 8-bit RGB/gray samples → PNG bytes (row-major, no alpha). */
   private def rasterToPng(samples: Array[Byte], w: Int, h: Int, colors: Int): Option[Array[Byte]] = {
-    if (w <= 0 || h <= 0 || samples.length < w * h * colors) return None
-    val img = new java.awt.image.BufferedImage(w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-    var y = 0
-    var idx = 0
-    while (y < h) {
-      var x = 0
-      while (x < w) {
-        val rgb =
-          if (colors == 3)
-            ((samples(idx) & 0xFF) << 16) | ((samples(idx + 1) & 0xFF) << 8) | (samples(idx + 2) & 0xFF)
-          else {
-            val g = samples(idx) & 0xFF
-            (g << 16) | (g << 8) | g
-          }
-        img.setRGB(x, y, rgb)
-        idx += colors
-        x += 1
-      }
-      y += 1
+    // Long: declared dims come from the file and must not overflow past the check
+    if (w <= 0 || h <= 0 || samples.length.toLong < w.toLong * h * colors) return None
+    val argb = new Array[Int](w * h)
+    var i = 0
+    while (i < argb.length) {
+      val s = i * colors
+      argb(i) =
+        if (colors == 3)
+          0xFF000000 | ((samples(s) & 0xFF) << 16) | ((samples(s + 1) & 0xFF) << 8) | (samples(s + 2) & 0xFF)
+        else {
+          val g = samples(s) & 0xFF
+          0xFF000000 | (g << 16) | (g << 8) | g
+        }
+      i += 1
     }
-    val bos = new ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(img, "png", bos)
-    Some(bos.toByteArray)
+    Some(ImageRenderer.writePng(argb, w, h, 1))
   }
 
   // ------------------------------------------------------------------- cmap

@@ -704,12 +704,15 @@ object Lakehouse {
     buf.toSeq
   }
 
-  /** The exact file set the most recent [[actionFrame]] call opened —
-    * the read-set observability `DataFrame.inputFiles` used to provide
-    * before the log reads went driver-side (a LocalRelation carries no
-    * input files); OccCommitSpec's bootstrap contract ("opened only
-    * 1 + |tail| manifests") pins it. */
-  @volatile private[graft] var lastLogReadFiles: Seq[String] = Nil
+  /** The exact file set the most recent [[actionFrame]] call ON THIS
+    * THREAD opened — the read-set observability `DataFrame.inputFiles`
+    * used to provide before the log reads went driver-side (a
+    * LocalRelation carries no input files); OccCommitSpec's bootstrap
+    * contract ("opened only 1 + |tail| manifests") pins it. Per thread,
+    * so concurrent OCC readers never see each other's read sets. */
+  private val logReadFiles = ThreadLocal.withInitial[Seq[String]](() => Nil)
+
+  private[graft] def lastLogReadFiles(): Seq[String] = logReadFiles.get
 
   /** Versioned action frame over `files`, driver-side when the total
     * bytes fit [[localLogMaxBytes]] (LocalRelation — zero scan jobs),
@@ -717,7 +720,7 @@ object Lakehouse {
   private def actionFrame(s: org.apache.spark.sql.SparkSession,
       files: Seq[(java.io.File, Option[Int])])
       : org.apache.spark.sql.DataFrame = {
-    lastLogReadFiles = files.map(_._1.getAbsolutePath)
+    logReadFiles.set(files.map(_._1.getAbsolutePath))
     if (files.map(_._1.length()).sum <= localLogMaxBytes(s)) {
       import scala.jdk.CollectionConverters._
       s.createDataFrame(actionRowsLocal(files).asJava, VersionedActionSchema)

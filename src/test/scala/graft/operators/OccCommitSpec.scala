@@ -132,10 +132,41 @@ class OccCommitSpec extends SparkTestBase {
     // driver-side, so the read set comes from the read plane's own
     // record rather than DataFrame.inputFiles, which a LocalRelation
     // does not carry)
-    val opened = Lakehouse.lastLogReadFiles.sorted
+    val opened = Lakehouse.lastLogReadFiles().sorted
     assert(opened.size == 1 + tail.size,
       s"bootstrap opened ${opened.size} manifests: $opened")
     assert(opened.exists(_.contains("cp_v00002")), opened.toString)
+  }
+
+  test("log read sets are per thread: a concurrent reader never overwrites another's") {
+    val roots = Seq(freshRoot(), freshRoot())
+    Lakehouse.occCommit(spark, roots(0), Seq(row("a0")), snapshotVersion = -1)
+    Lakehouse.occCommit(spark, roots(1), Seq(row("a1")), snapshotVersion = -1)
+    Lakehouse.occCommit(spark, roots(1), Seq(row("b1")), snapshotVersion = 0)
+    // reader 0 reads, then reader 1 reads, then both report what they
+    // opened: reader 0's report comes after reader 1's read
+    val barrier = new CyclicBarrier(2)
+    val seen = new java.util.concurrent.ConcurrentHashMap[Int, Seq[String]]()
+    val errors = new ConcurrentLinkedQueue[Throwable]()
+    val readers = roots.indices.map { i =>
+      new Thread(() => try {
+        if (i == 1) barrier.await(30, TimeUnit.SECONDS)
+        Lakehouse.occLogWithVersions(spark, roots(i))
+        if (i == 0) barrier.await(30, TimeUnit.SECONDS)
+        barrier.await(30, TimeUnit.SECONDS)
+        seen.put(i, Lakehouse.lastLogReadFiles())
+        ()
+      } catch { case t: Throwable => errors.add(t); () })
+    }
+    readers.foreach(_.start())
+    readers.foreach(_.join(60000))
+    assert(errors.isEmpty, errors.toString)
+    roots.indices.foreach { i =>
+      val opened = seen.get(i)
+      assert(opened.size == i + 1, s"reader $i opened $opened")
+      assert(opened.forall(_.startsWith(roots(i).getAbsolutePath)),
+        s"reader $i saw another reader's files: $opened")
+    }
   }
 
   test("e20 staged log: compactions retired 4 victims, visible state swaps them for packed files, rows preserved") {
