@@ -1,24 +1,25 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.ingest.{FormatDetection, UploadValidation}
-import graft.kernel.ConvertKernel
-import graft.kernel.ConvertKernel.ConversionConfig
+import graft.ingest.UploadValidation
+import graft.kernel.ConvertKernel.{ConversionConfig, FileOptions}
+import graft.sources.ConvertDataSource
 
 /** The composed ingest→convert pipeline (SURVEY §3.1 trace as a library
-  * entry point): binary source → size-limit predicate → columnar format
-  * detection → mapPartitions kernel → error-as-column results.
+  * entry point): a directory read through the `docling` scan
+  * (graft.sources.ConvertDataSource) — listing → core-sized LPT
+  * partitions → size check before any read → ConvertKernel.convertOne
+  * per file → error-as-column results.
   *
   * A user of the reference's batch-convert endpoint points this at a
-  * directory instead. Declarative pre-pass rules:
-  *  - over-limit and unsupported-format rows become error rows WITHOUT
-  *    their content ever entering the kernel (the columnar `when` cascade
-  *    runs inside the scan stage; Catalyst prunes `content` from the
-  *    error branch);
-  *  - everything else converts in partition parallelism with per-row
-  *    error capture, exactly like ConvertKernel.convertOne;
+  * directory instead:
+  *  - over-limit files become 413 error rows without their content ever
+  *    being read;
+  *  - unsupported formats and parse failures become error rows from the
+  *    kernel's one format-detection decision tree, exactly like
+  *    ConvertKernel.convertOne;
   *  - error messages match the reference's (413 size text, unsupported
   *    format text), and batchMode controls the stem/full-filename
   *    asymmetry the same way.
@@ -28,31 +29,23 @@ object Pipeline {
   def convertDirectory(spark: SparkSession, dir: String,
                        config: ConversionConfig = ConversionConfig(),
                        maxFileMb: Int = UploadValidation.DefaultMaxFileMb,
-                       batchMode: Boolean = true): DataFrame = {
-    import spark.implicits._
+                       batchMode: Boolean = true): DataFrame =
+    scan(spark, Seq(dir), FileOptions(config, maxFileMb, batchMode))
 
-    val files = spark.read.format("binaryFile").load(dir)
-      .select(
-        regexp_extract($"path", "([^/]+)$", 1).as("filename"),
-        $"content", $"length")
-
-    // One pass over one scan: rows with a pre-pass error short-circuit to
-    // the reference's error-row shape (stem in single mode, full filename
-    // in batch — ConvertKernel.stem), everything else goes through the
-    // kernel. Two filtered branches would re-read every file's bytes.
-    convertRows(files, config, maxFileMb, batchMode)
-  }
+  private def scan(spark: SparkSession, paths: Seq[String],
+                   options: FileOptions): DataFrame =
+    spark.read.format("docling").options(options.toOptions).load(paths: _*)
 
   /** INCREMENTAL [[convertDirectory]]: convert only files not yet
-    * recorded in the `ledgerDir` parquet of done paths, then append the
-    * newly-done paths to the ledger — the daily-drop ingest shape (the
-    * orchestration-plane analog of d11's incremental dedup: never
-    * re-convert the corpus to ingest a batch). The pending set is a
-    * LISTING-level left-anti join — only `(path, length)` rows reach the
-    * join, the binary `content` column is pruned until after the
-    * pending filter, so the join cost is O(listing), not O(bytes). A
-    * file whose length changed re-converts (path+length is the change
-    * key; a real deployment would use modificationTime too).
+    * recorded in the `ledgerDir` parquet of done `(filename, length)`
+    * rows, then append the newly-done rows to the ledger — the daily-drop
+    * ingest shape (the orchestration-plane analog of d11's incremental
+    * dedup: never re-convert the corpus to ingest a batch). The pending
+    * set is a LISTING-level left-anti join — the scan's own listing of
+    * `(filename, length, path)`, never a byte of content — and only the
+    * pending paths reach the `docling` scan. A file whose length changed
+    * re-converts (filename+length is the change key; a real deployment
+    * would use modificationTime too).
     *
     * Commit-order contract: the ledger append runs at CALL time, before
     * the caller materializes the returned results — at-most-once
@@ -68,10 +61,10 @@ object Pipeline {
                                   batchMode: Boolean = true): (DataFrame, Long) = {
     import spark.implicits._
 
-    val listing = spark.read.format("binaryFile").load(dir)
-      .select(
-        regexp_extract($"path", "([^/]+)$", 1).as("filename"),
-        $"content", $"length")
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    val listing = ConvertDataSource.listFiles(Seq(dir), hadoopConf)
+      .map(f => (f.getPath.getName, f.getLen, f.getPath.toString))
+      .toDF("filename", "length", "path")
 
     // probe through the Hadoop FileSystem API, not java.io.File: the
     // ledger lives wherever the deployment points it (HDFS/object
@@ -79,8 +72,7 @@ object Pipeline {
     // run re-converting the whole directory while appending duplicate
     // ledger rows, silently defeating the incremental contract
     val ledgerPath = new org.apache.hadoop.fs.Path(ledgerDir)
-    val ledgerFs = ledgerPath.getFileSystem(
-      spark.sessionState.newHadoopConf())
+    val ledgerFs = ledgerPath.getFileSystem(hadoopConf)
     val ledgerExists = ledgerFs.exists(ledgerPath) &&
       ledgerFs.listStatus(ledgerPath)
         .exists(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
@@ -91,41 +83,22 @@ object Pipeline {
     val nDone = done.count()
     // a file is done iff the ledger holds exactly its (filename, length)
     // — a changed file's new length isn't there, so it re-converts, and
-    // its stale ledger row is harmless. Left-anti on the narrow listing
-    // columns; content stays pruned below the pending filter.
+    // its stale ledger row is harmless
     val pending = listing.join(done, Seq("filename", "length"), "left_anti")
-      .select($"filename", $"content", $"length")
+      .select($"filename", $"length", $"path")
+      .as[(String, Long, String)].collect()
 
-    val results = convertRows(pending, config, maxFileMb, batchMode)
+    val results =
+      if (pending.isEmpty)
+        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], ConvertDataSource.schema)
+      else scan(spark, pending.map(_._3).toSeq, FileOptions(config, maxFileMb, batchMode))
 
-    // record the newly-converted paths (append-only ledger)
-    pending.select($"filename", $"length")
+    // record the newly-converted files (append-only ledger)
+    pending.map { case (name, len, _) => (name, len) }.toSeq
+      .toDF("filename", "length")
       .write.mode("append").parquet(ledgerDir)
 
     (results, nDone)
-  }
-
-  /** The shared pre-check → kernel tail of [[convertDirectory]], over an
-    * arbitrary `(filename, content, length)` frame. */
-  private def convertRows(files: DataFrame, config: ConversionConfig,
-                          maxFileMb: Int, batchMode: Boolean): DataFrame = {
-    import files.sparkSession.implicits._
-    val checked = files.withColumn("pre_error",
-      when($"length" > UploadValidation.mbToBytes(maxFileMb),
-        UploadValidation.fileTooLargeError(maxFileMb))
-        .when(FormatDetection.detectFormatCol($"content", $"filename").isNull,
-          concat(lit("Unsupported file format: "), $"filename")))
-    checked.select($"filename", $"content", $"pre_error")
-      .as[(String, Array[Byte], String)]
-      .mapPartitions { it =>
-        it.map { case (name, content, preError) =>
-          if (preError != null) {
-            val errorName =
-              if (batchMode) name else ConvertKernel.stemOf(name)
-            ConvertKernel.ConversionResult(errorName, null, Seq.empty, preError)
-          } else ConvertKernel.convertOne(name, content, config, batchMode)
-        }
-      }.toDF()
   }
 
   /** [[convertDirectory]] with run metrics attached via Spark's

@@ -2,9 +2,6 @@ package graft.ingest
 
 import java.nio.charset.StandardCharsets
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
-
 /** Format detection — content sniff with extension fallback (reference:
   * document_converter/utils.py:87-104 `guess_format`, MIME tables :27-61,
   * HTML sniff :66-79, extension fallback :123-132).
@@ -20,11 +17,10 @@ import org.apache.spark.sql.functions._
   *   5. text/plain default — which maps to NO InputFormat: plain text is
   *      an unsupported format in the reference, and stays so here.
   *
-  * Exposed both as a plain Scala function (kernel-side, per-row inside
-  * mapPartitions) and as a Column expression (`detectFormatCol`) so the
-  * relational ingest plane keeps the sniff inside codegen — cheap
-  * predicates first, exactly the reference's short-circuit ordering
-  * (SURVEY.md §4).
+  * One decision tree, as plain Scala functions: the kernel
+  * (ConvertKernel.convertOne) and the upload validator call
+  * [[guessFormat]] per document — cheap predicates first, exactly the
+  * reference's short-circuit ordering (SURVEY.md §4).
   */
 object FormatDetection {
 
@@ -168,67 +164,4 @@ object FormatDetection {
 
   def isSupported(content: Array[Byte], filename: String): Boolean =
     guessFormat(content, filename).isDefined
-
-  // ------------------------------------------------------------------
-  // Column-expression form: the same decision tree as a codegen'd when()
-  // cascade over (content, filename) columns — cheap predicates first.
-  // ------------------------------------------------------------------
-
-  private def hexPrefix(contentCol: Column, bytes: Int): Column =
-    hex(substring(contentCol, 1, bytes))
-
-  /** rsplit('.', 1) extension, matching the scalar path exactly: no
-    * dotfiles, case-sensitive, trailing dot → empty ext. */
-  private def extCol(filenameCol: Column): Column =
-    when(filenameCol.rlike("^[^.].*\\."),
-      regexp_extract(filenameCol, "\\.([^.]*)$", 1)).otherwise(lit(""))
-
-  /** Column-level format detection. The html content sniff mirrors the
-    * scalar path's comment handling: XML comments are stripped from the
-    * decoded prefix before the doctype match, so `<!-- c --><html>` agrees
-    * between `Pipeline.convertDirectory`'s pre-pass and `convertOne`
-    * (remaining approximation vs the scalar path: the 1024-byte window and
-    * no non-ASCII byte filtering — both property-tested to agree on
-    * random corpora). */
-  def detectFormatCol(contentCol: Column, filenameCol: Column): Column = {
-    val ext = extCol(filenameCol)
-    val prefixStr = regexp_replace(
-      lower(decode(substring(contentCol, 1, 1024), "ISO-8859-1")),
-      "(?s)<!--.*?-->", "")
-    // zip classification scans the same 4096-byte window as the scalar
-    // path — real OOXML containers put word/ or ppt/ entries past 1 KB
-    val zipHead = decode(substring(contentCol, 1, 4096), "ISO-8859-1")
-    when(lower(filenameCol).endsWith(".csv"), "csv")
-      .when(hexPrefix(contentCol, 4) === "25504446", "pdf") // %PDF
-      .when(hexPrefix(contentCol, 8) === "89504E470D0A1A0A", "image") // PNG
-      .when(hexPrefix(contentCol, 3) === "FFD8FF", "image") // JPEG
-      .when(hexPrefix(contentCol, 4).isin("47494638"), "image") // GIF8
-      .when(hexPrefix(contentCol, 4).isin("49492A00", "4D4D002A"), "image") // TIFF
-      .when(hexPrefix(contentCol, 2) === "424D" &&
-        length(contentCol) > 14, "image") // BMP (length guard = kernel path)
-      .when(hexPrefix(contentCol, 4) === "504B0304" &&
-        instr(zipHead, "word/") > 0, "docx")
-      .when(hexPrefix(contentCol, 4) === "504B0304" &&
-        instr(zipHead, "ppt/") > 0, "pptx")
-      .when(hexPrefix(contentCol, 4) === "504B0304", lit(null).cast("string"))
-      // recognized-but-unsupported magics: sniff preempts extension fallback
-      .when(hexPrefix(contentCol, 3) === "494433", lit(null).cast("string")) // ID3
-      .when(hexPrefix(contentCol, 2) === "FFFB", lit(null).cast("string")) // mp3 sync
-      .when(hexPrefix(contentCol, 4) === "52494646", lit(null).cast("string")) // RIFF
-      .when(hexPrefix(contentCol, 4) === "4F676753", lit(null).cast("string")) // OggS
-      .when(hexPrefix(contentCol, 4) === "664C6143", lit(null).cast("string")) // fLaC
-      .when(length(contentCol) >= 12 &&
-        hex(substring(contentCol, 5, 4)) === "66747970", lit(null).cast("string")) // ftyp
-      .when(hexPrefix(contentCol, 2) === "4D5A", lit(null).cast("string")) // MZ
-      .when(hexPrefix(contentCol, 4) === "7F454C46", lit(null).cast("string")) // ELF
-      .when(hexPrefix(contentCol, 2) === "1F8B", lit(null).cast("string")) // gzip
-      .when(hexPrefix(contentCol, 4) === "377ABCAF", lit(null).cast("string")) // 7z
-      .when(hexPrefix(contentCol, 4) === "52617221", lit(null).cast("string")) // Rar!
-      .when(ext.isin(FormatToExtensions("asciidoc"): _*), "asciidoc")
-      .when(ext.isin(FormatToExtensions("html"): _*), "html")
-      .when(ext === "md", "md")
-      .when(prefixStr.rlike("^\\s*(<!doctype\\s+html|<html|<head|<body)"), "html")
-      .when(prefixStr.rlike("^\\s*<\\?xml") && instr(prefixStr, "xhtml") > 0, "html")
-      .otherwise(lit(null).cast("string"))
-  }
 }

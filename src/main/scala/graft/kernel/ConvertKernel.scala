@@ -1,15 +1,14 @@
 package graft.kernel
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import graft.ingest.{FormatDetection, Transcode, UploadValidation}
 
-import graft.ingest.{FormatDetection, Transcode}
-
-/** The conversion map kernel (SURVEY.md O8-O16): the reference's
+/** The conversion kernel (SURVEY.md O8-O16): the reference's
   * DoclingDocumentConversion.convert / convert_batch
   * (document_converter/service.py:133-188), Spark-first.
   *
-  * Executed as `Dataset.mapPartitions` — one parser-registry touch per
-  * partition (the per-executor lazy-singleton pattern replacing the
+  * [[convertOne]] converts one document. Over files it runs inside the
+  * `docling` scan's partition readers (graft.sources.ConvertDataSource) —
+  * the parser registry is a per-executor lazy singleton (replacing the
   * reference's per-build model preload, Dockerfile:45-51), NEVER a per-row
   * udf. Where the reference's `convert_all` loops documents sequentially in
   * one worker (service.py:171-186), partitions here convert in parallel —
@@ -24,9 +23,6 @@ import graft.ingest.{FormatDetection, Transcode}
   * data errors.
   */
 object ConvertKernel {
-
-  /** Engine-facing upload row (FIXTURES.md §B). */
-  final case class UploadRow(path: String, filename: String, content: Array[Byte], length: Long)
 
   final case class ImageData(`type`: String, filename: String, image: String)
 
@@ -59,6 +55,44 @@ object ConvertKernel {
     /** The reference's per-request copy-with-overrides, as a pure copy. */
     def withOverrides(extractTables: Boolean, scale: Int): ConversionConfig =
       copy(extractTablesAsImages = extractTables, imageResolutionScale = scale)
+  }
+
+  /** What converting a FILE needs besides its bytes: the request config,
+    * the upload size cap, and batch (full filename) or single (stem)
+    * error naming. `toOptions`/`fromOptions` are its string form — the
+    * `docling` source's reader options — so every file→kernel caller
+    * passes its settings through one parser. */
+  final case class FileOptions(
+      config: ConversionConfig = ConversionConfig(),
+      maxFileMb: Int = UploadValidation.DefaultMaxFileMb,
+      batchMode: Boolean = true) {
+    def toOptions: Map[String, String] =
+      Map("extractTablesAsImages" -> config.extractTablesAsImages.toString,
+        "imageResolutionScale" -> config.imageResolutionScale.toString,
+        "outputFormat" -> config.outputFormat,
+        "maxFileMb" -> maxFileMb.toString,
+        "batchMode" -> batchMode.toString) ++
+        config.ocrEngine.map("ocrEngine" -> _)
+  }
+
+  object FileOptions {
+    /** Inverse of [[FileOptions.toOptions]]; keys match case-insensitively
+      * (Spark lower-cases data source options) and absent keys take the
+      * defaults. Invalid values throw here, at planning time. */
+    def fromOptions(options: Map[String, String]): FileOptions = {
+      val o = options.map { case (k, v) => k.toLowerCase(java.util.Locale.ROOT) -> v }
+      val d = FileOptions()
+      FileOptions(
+        ConversionConfig(
+          extractTablesAsImages = o.get("extracttablesasimages").fold(
+            d.config.extractTablesAsImages)(_.toBoolean),
+          imageResolutionScale = o.get("imageresolutionscale").fold(
+            d.config.imageResolutionScale)(_.toInt),
+          outputFormat = o.getOrElse("outputformat", d.config.outputFormat),
+          ocrEngine = o.get("ocrengine")),
+        maxFileMb = o.get("maxfilemb").fold(d.maxFileMb)(_.toInt),
+        batchMode = o.get("batchmode").fold(d.batchMode)(_.toBoolean))
+    }
   }
 
   /** Pluggable OCR engine — the lane consumer's CONTRACT (VERDICT r12
@@ -246,21 +280,6 @@ object ConvertKernel {
       case e: Exception =>
         ConversionResult(errorName, null, Seq.empty,
           s"Conversion failed: ${e.getMessage}")
-    }
-  }
-
-  /** The distributed kernel: partitions convert independently and in
-    * parallel. Column-prune before calling this — only (filename, content)
-    * are needed (SURVEY.md §4: never drag BinaryType through stages that
-    * don't need it). */
-  def convert(docs: Dataset[UploadRow], config: ConversionConfig = ConversionConfig(),
-              batchMode: Boolean = false): Dataset[ConversionResult] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.mapPartitions { it =>
-      val pool = ParserPool.parsers // one registry touch per partition
-      require(pool.nonEmpty)
-      it.map(row => convertOne(row.filename, row.content, config, batchMode))
     }
   }
 

@@ -28,11 +28,11 @@ import graft.kernel.ConvertKernel.ConversionConfig
   * writes its own partition's files — on a cluster this is a shared
   * filesystem, here java.io.tmpdir), staged write-once per sf dir, and
   * the read side is the real [[Pipeline.convertDirectory]] plan: one
-  * binaryFile scan → columnar pre-checks → mapPartitions kernel, no
-  * shuffle before the final sort. Measured cost note (sf0.1, 5000 docs):
-  * the warm binaryFile scan alone is ~3 s — per-file Hadoop open
-  * overhead on thousands of KB-sized files — while the conversion kernel
-  * adds only ~0.3 s on top; this is the classic small-files shape, and
+  * `docling` scan whose partition readers run the kernel, no shuffle
+  * before the final sort. Measured cost note (sf0.1, 5000 docs, on the
+  * earlier binaryFile read): the warm file scan alone was ~3 s —
+  * per-file Hadoop open overhead on thousands of KB-sized files — while
+  * the conversion kernel added only ~0.3 s on top; this is the classic small-files shape, and
   * at real corpus scale (MB-sized documents) the per-open cost amortizes
   * per byte. The kernel itself is not the bottleneck.
   */

@@ -3,52 +3,62 @@ package graft.sources
 import java.util
 import java.util.concurrent.atomic.AtomicLong
 
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
+import graft.ingest.UploadValidation
 import graft.kernel.ConvertKernel
-import graft.kernel.ConvertKernel.{ConversionConfig, ConversionResult}
+import graft.kernel.ConvertKernel.{ConversionResult, FileOptions}
 
-/** The conversion kernel as a native DataSource V2 table:
+/** The conversion kernel as a native DataSource V2 table, and the ONE
+  * code path that runs the kernel over files:
   *
   * {{{
   *   spark.read.format("graft.sources.ConvertDataSource").load(dir)
   *   -- or, after META-INF/services registration --
   *   spark.read.format("docling").load(dir)
+  *   spark.read.format("docling").load(paths: _*)
   * }}}
   *
-  * yields `(filename, markdown, images, error)` rows — the same result
-  * frame as [[graft.Pipeline.convertDirectory]], but as a TABLE the
-  * planner owns end-to-end. What the connector tier buys over the
-  * mapPartitions pipeline:
+  * yields `(filename, markdown, images, error)` rows.
+  * [[graft.Pipeline.convertDirectory]], its incremental variant and the
+  * streaming inbox (graft.streaming.EventStreams) are all reads of this
+  * table. Each `path`/`paths` entry names a directory (listed flat,
+  * skipping names that start with `_` or `.`, as Spark's file sources
+  * do) or a file. What the connector tier buys:
   *
   *  - COLUMN PRUNING reaches the kernel: a `SELECT filename` (or a
   *    count(*)) prunes the schema to metadata-only columns, and the
   *    reader never parses a byte — at 100 TB, listing-level queries cost
-  *    listing-level work. The pipeline form must at least thread the
-  *    content column into its mapPartitions.
-  *  - size-capped input partitions: small files bin-pack (amortizing
-  *    task and FS-open overhead), while any file above the target byte
-  *    size isolates into its own partition — a giant PDF cannot
-  *    straggle a multi-file split, and 5000 tiny docs don't become
-  *    5000 tasks. `maxBytesPerPartition` tunes the target (default 4 MB).
+  *    listing-level work.
+  *  - partitions sized for the cores: `min(#files, 4 × defaultParallelism)`
+  *    buckets filled largest file first onto the lightest bucket
+  *    ([[ConvertDataSource.plan]]), so one big document or a run of
+  *    same-format files cannot straggle a wave, and 5000 tiny docs don't
+  *    become 5000 tasks.
+  *  - the size check runs before any read (the reference's bounded-read
+  *    rule): an over-limit file becomes a 413 error row unread.
   *
-  * Options: `extractTablesAsImages` (bool, default false),
-  * `imageResolutionScale` (int 1-4, default 4), `maxFileMb` (int),
-  * `batchMode` (bool, DEFAULT TRUE — a directory is the batch-convert
-  * surface, matching Pipeline.convertDirectory so k5 == k1; pass false
-  * for the single-document stem naming) — mirroring the reference's
-  * query parameters (route.py:46-51).
+  * Options are [[ConvertKernel.FileOptions]]' string form:
+  * `extractTablesAsImages` (bool, default false), `imageResolutionScale`
+  * (int 1-4, default 4), `outputFormat` (default md), `ocrEngine`,
+  * `maxFileMb` (int), `batchMode` (bool, DEFAULT TRUE — a directory is
+  * the batch-convert surface; pass false for the single-document stem
+  * naming) — mirroring the reference's query parameters (route.py:46-51).
   *
   * The reader itself is the SAME [[ConvertKernel.convertOne]] every other
   * plane uses; this file is only the planner plumbing.
@@ -81,25 +91,51 @@ object ConvertDataSource {
     * in local mode only (executors share the JVM). */
   val kernelCalls = new AtomicLong(0)
 
-  /** Greedy bin packing preserving input order: a partition closes when
-    * adding the next file would cross `targetBytes` OR it already holds
-    * `maxFiles`. A file larger than the target therefore lands ALONE in
-    * its partition (the no-straggler isolation rule). Pure and
-    * property-tested (ConvertDataSourceSpec). */
-  private[sources] def pack(files: Seq[(String, Long)], targetBytes: Long,
-                            maxFiles: Int): Seq[Vector[(String, Long)]] = {
-    val parts = scala.collection.mutable.ArrayBuffer[Vector[(String, Long)]]()
-    var cur = Vector.empty[(String, Long)]
-    var curBytes = 0L
-    files.foreach { f =>
-      if (cur.nonEmpty && (curBytes + f._2 > targetBytes || cur.length >= maxFiles)) {
-        parts += cur; cur = Vector.empty; curBytes = 0L
-      }
-      cur :+= f
-      curBytes += f._2
+  /** Input partitions per core: enough buckets that LPT's imbalance is a
+    * small share of each core's work, few enough that per-task overhead
+    * stays amortized. */
+  val BucketsPerCore = 4
+
+  /** The `path` and `paths` options (`load(paths: _*)` sets the latter as
+    * a JSON array, like Spark's file sources read it). */
+  private[sources] def paths(options: Map[String, String]): Seq[String] =
+    options.get("paths").toSeq.flatMap(json =>
+      new com.fasterxml.jackson.databind.ObjectMapper()
+        .readValue(json, classOf[Array[String]]).toSeq) ++
+      options.get("path").toSeq
+
+  /** The files `paths` name: a directory lists flat, skipping names that
+    * start with `_` or `.` (`_SUCCESS`, `.crc` — Spark's file-source
+    * rule); a file stands for itself. */
+  def listFiles(paths: Seq[String], hadoopConf: Configuration): Seq[FileStatus] =
+    paths.flatMap { dir =>
+      val p = new Path(dir)
+      val fs = p.getFileSystem(hadoopConf)
+      if (fs.isDirectory(p))
+        fs.listStatus(p).toSeq.filter { f =>
+          val name = f.getPath.getName
+          f.isFile && !name.startsWith("_") && !name.startsWith(".")
+        }
+      else Seq(fs.getFileStatus(p))
     }
-    if (cur.nonEmpty) parts += cur
-    parts.toSeq
+
+  /** LPT planning: `(path, bytes)` files, largest first, each onto the
+    * currently lightest of `min(#files, buckets)` buckets — the classic
+    * greedy makespan bound (the heaviest bucket holds at most
+    * total/k + the largest file). Empty files weigh 1 so they spread
+    * too; ties break by path and bucket index, so a listing always plans
+    * the same way. Pure and property-tested (ConvertDataSourceSpec). */
+  private[sources] def plan(files: Seq[(String, Long)], buckets: Int): Seq[Vector[(String, Long)]] = {
+    val k = math.min(files.length, buckets)
+    val lightest = mutable.PriorityQueue.tabulate(k)(i => (0L, i))(
+      Ordering[(Long, Int)].reverse)
+    val out = Array.fill(k)(Vector.newBuilder[(String, Long)])
+    files.sortBy { case (path, len) => (-len, path) }.foreach { f =>
+      val (load, i) = lightest.dequeue()
+      out(i) += f
+      lightest.enqueue((load + math.max(f._2, 1L), i))
+    }
+    out.toSeq.map(_.result())
   }
 }
 
@@ -109,8 +145,9 @@ final class ConvertTable(properties: Map[String, String]) extends Table with Sup
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ConvertScanBuilder(
-      options.asScala.toMap ++ properties)
+    new ConvertScanBuilder((properties ++ options.asScala).map {
+      case (k, v) => k.toLowerCase(java.util.Locale.ROOT) -> v
+    })
 }
 
 final class ConvertScanBuilder(options: Map[String, String])
@@ -125,63 +162,49 @@ final class ConvertScanBuilder(options: Map[String, String])
 
 final class ConvertScan(options: Map[String, String], required: StructType)
     extends Scan with Batch {
+  // parsed once per scan, on the driver: a bad option fails the query at
+  // planning instead of inside every task
+  private val fileOptions = FileOptions.fromOptions(options)
+
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
 
   override def planInputPartitions(): Array[InputPartition] = {
-    val dir = options.getOrElse("path",
-      throw new IllegalArgumentException("docling source requires a path"))
-    val hconf = SparkSession.active.sessionState.newHadoopConf()
-    val p = new Path(dir)
-    val fs = p.getFileSystem(hconf)
-    val files: Array[FileStatus] =
-      if (fs.isDirectory(p)) fs.listStatus(p).filter(_.isFile)
-      else Array(fs.getFileStatus(p))
-    // size-capped bin packing: small files amortize task-launch and FS
-    // open overhead inside one partition (5000 tiny docs = 5000 tasks
-    // measured 12x slower than packed), while any file larger than the
-    // target gets its OWN partition so a giant document still cannot
-    // straggle a multi-file split
-    val targetBytes = options.get("maxbytesperpartition").map(_.toLong)
-      .getOrElse(4L * 1024 * 1024)
-    // a files-per-partition bound keeps parallelism when files are tiny
-    // (5000 x 1 KB under a byte cap alone would pack into 2 partitions
-    // and serialize the kernel); default targets ~4 waves of tasks
-    val maxFiles = options.get("maxfilesperpartition").map(_.toInt)
-      .getOrElse {
-        val slots = math.max(1, SparkSession.active.sparkContext.defaultParallelism)
-        math.max(1, math.min(512, (files.length + 4 * slots - 1) / (4 * slots)))
-      }
-    ConvertDataSource.pack(
-      files.sortBy(_.getPath.getName).map(f => (f.getPath.toString, f.getLen)).toSeq,
-      targetBytes, maxFiles)
-      .map(fs => ConvertInputPartition(fs): InputPartition).toArray
+    val spark = SparkSession.active
+    val paths = ConvertDataSource.paths(options)
+    require(paths.nonEmpty, "docling source requires a path")
+    val files = ConvertDataSource.listFiles(paths, spark.sessionState.newHadoopConf())
+    ConvertDataSource.plan(files.map(f => (f.getPath.toString, f.getLen)),
+        ConvertDataSource.BucketsPerCore * spark.sparkContext.defaultParallelism)
+      .map(ConvertInputPartition(_): InputPartition).toArray
   }
 
-  override def createReaderFactory(): PartitionReaderFactory =
-    // capture the SESSION Hadoop conf driver-side (spark.hadoop.*
-    // credentials, object-store endpoints, filesystem impls) — executors
-    // have no session, and a bare `new Configuration()` there would read
-    // local files fine but break against any configured remote store
-    new ConvertReaderFactory(required, options,
-      new org.apache.spark.util.SerializableConfiguration(
-        SparkSession.active.sessionState.newHadoopConf()))
+  override def createReaderFactory(): PartitionReaderFactory = {
+    // the SESSION Hadoop conf (spark.hadoop.* credentials, object-store
+    // endpoints, filesystem impls) — executors have no session, and a
+    // bare `new Configuration()` there would break against any configured
+    // remote store. Broadcast once per scan, as Spark's file scans do: a
+    // Configuration held by value is re-serialized into every task.
+    val spark = SparkSession.active
+    new ConvertReaderFactory(required, fileOptions,
+      spark.sparkContext.broadcast(
+        new SerializableConfiguration(spark.sessionState.newHadoopConf())))
+  }
 }
 
 final case class ConvertInputPartition(files: Vector[(String, Long)]) extends InputPartition
 
 final class ConvertReaderFactory(
-    required: StructType, options: Map[String, String],
-    hadoopConf: org.apache.spark.util.SerializableConfiguration)
+    required: StructType, options: FileOptions,
+    hadoopConf: Broadcast[SerializableConfiguration])
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     new ConvertReader(partition.asInstanceOf[ConvertInputPartition], required, options,
-      hadoopConf.value)
+      hadoopConf.value.value)
 }
 
 final class ConvertReader(part: ConvertInputPartition, required: StructType,
-                          options: Map[String, String],
-                          hadoopConf: org.apache.hadoop.conf.Configuration)
+                          options: FileOptions, hadoopConf: Configuration)
     extends PartitionReader[InternalRow] {
 
   private val it = part.files.iterator
@@ -192,73 +215,49 @@ final class ConvertReader(part: ConvertInputPartition, required: StructType,
   private val needsConversion =
     required.fieldNames.exists(f => f == "markdown" || f == "images" || f == "error")
 
-  private lazy val fullSerializer =
-    ExpressionEncoder[ConversionResult]().createSerializer()
-
   override def next(): Boolean = {
     if (!it.hasNext) return false
     val (path, length) = it.next()
     val name = new Path(path).getName
-    current =
-      if (!needsConversion) projectMetadataOnly(name)
-      else {
-        val maxFileMb = options.get("maxfilemb").map(_.toInt)
-          .getOrElse(graft.ingest.UploadValidation.DefaultMaxFileMb)
-        val batchMode = options.get("batchmode").forall(_.toBoolean)
-        // size check BEFORE any read (the reference's bounded-read rule,
-        // O2): an over-limit multi-GB file must 413 without buffering —
-        // reading it first would also overflow the Int array size
-        val result =
-          if (length > graft.ingest.UploadValidation.mbToBytes(maxFileMb)) {
-            val errorName = if (batchMode) name else ConvertKernel.stemOf(name)
-            ConversionResult(errorName, null, Seq.empty,
-              graft.ingest.UploadValidation.fileTooLargeError(maxFileMb))
-          } else {
-            val fsPath = new Path(path)
-            val fs = fsPath.getFileSystem(hadoopConf)
-            val in = fs.open(fsPath)
-            val bytes =
-              try {
-                val buf = new Array[Byte](length.toInt)
-                in.readFully(0, buf)
-                buf
-              } finally in.close()
-            ConvertDataSource.kernelCalls.incrementAndGet()
-            val config = ConversionConfig(
-              extractTablesAsImages = options.get("extracttablesasimages").exists(_.toBoolean),
-              imageResolutionScale = options.get("imageresolutionscale").map(_.toInt).getOrElse(4))
-            ConvertKernel.convertOne(name, bytes, config, batchMode)
-          }
-        project(fullSerializer(result))
+    val result =
+      if (!needsConversion) ConversionResult(name, null, Seq.empty, null)
+      // size check BEFORE any read (the reference's bounded-read rule,
+      // O2): an over-limit multi-GB file must 413 without buffering —
+      // reading it first would also overflow the Int array size
+      else if (length > UploadValidation.mbToBytes(options.maxFileMb)) {
+        val errorName = if (options.batchMode) name else ConvertKernel.stemOf(name)
+        ConversionResult(errorName, null, Seq.empty,
+          UploadValidation.fileTooLargeError(options.maxFileMb))
+      } else {
+        val fsPath = new Path(path)
+        val fs = fsPath.getFileSystem(hadoopConf)
+        val in = fs.open(fsPath)
+        val bytes =
+          try {
+            val buf = new Array[Byte](length.toInt)
+            in.readFully(0, buf)
+            buf
+          } finally in.close()
+        ConvertDataSource.kernelCalls.incrementAndGet()
+        ConvertKernel.convertOne(name, bytes, options.config, options.batchMode)
       }
+    current = toRow(result)
     true
   }
 
-  /** Metadata-only projection: filename (and nothing else is derivable
-    * without conversion — pruned schemas asking only for it skip I/O). */
-  private def projectMetadataOnly(name: String): InternalRow = {
-    val values = required.fieldNames.map {
-      case "filename" => UTF8String.fromString(name)
-      case other => throw new IllegalStateException(
-        s"column $other requires conversion but needsConversion=false")
-    }
-    InternalRow.fromSeq(values.toIndexedSeq)
-  }
-
-  /** Prune the full serialized row down to the required columns. The
-    * serializer REUSES its output buffer across calls, so every value —
-    * strings AND the images array with its nested strings — must be
-    * detached before the next file overwrites it; one whole-row copy
-    * covers all columns at once (copying field-by-field missed the
-    * ArrayData case and handed out views into the shared buffer). */
-  private def project(reused: InternalRow): InternalRow = {
-    val full = reused.copy()
-    val fullSchema = ConvertDataSource.schema
-    val values = required.fieldNames.map { f =>
-      val i = fullSchema.fieldIndex(f)
-      full.get(i, fullSchema(i).dataType)
-    }
-    InternalRow.fromSeq(values.toIndexedSeq)
+  /** The required columns of `r` as a fresh row — built by hand, not
+    * through an ExpressionEncoder that every task would derive and
+    * code-generate again; a fresh row per file also never aliases the
+    * next file's buffers. */
+  private def toRow(r: ConversionResult): InternalRow = {
+    def str(s: String) = UTF8String.fromString(s) // null stays null
+    InternalRow.fromSeq(required.fieldNames.toIndexedSeq.map {
+      case "filename" => str(r.filename)
+      case "markdown" => str(r.markdown)
+      case "images" => new GenericArrayData(r.images.map(i =>
+        InternalRow(str(i.`type`), str(i.filename), str(i.image))))
+      case "error" => str(r.error)
+    })
   }
 
   override def get(): InternalRow = current

@@ -6,6 +6,7 @@ import java.util.UUID
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.Path
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.connector.catalog.{SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, Write, WriteBuilder, WriterCommitMessage}
@@ -129,13 +130,16 @@ final class DocSinkBatchWrite(dir: String, filenameIdx: Int, contentIdx: Int,
   private val jobId = UUID.randomUUID().toString
   private def stagingPath = new Path(dir, s"_staging_$jobId")
 
-  // the driver serializes its resolved Hadoop conf to the executors —
-  // the same credential/filesystem plumbing the read connector ships
+  // the driver's resolved Hadoop conf — the same credential/filesystem
+  // plumbing the read connector ships to the executors
   private val conf = new SerializableConfiguration(
     org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf())
 
+  // broadcast once per write job: a conf held by value in the factory is
+  // re-serialized into every task
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    new DocSinkWriterFactory(dir, jobId, filenameIdx, contentIdx, bundleDocs, conf)
+    new DocSinkWriterFactory(dir, jobId, filenameIdx, contentIdx, bundleDocs,
+      org.apache.spark.sql.SparkSession.active.sparkContext.broadcast(conf))
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     // tasks already published their files in their own commit();
@@ -157,11 +161,11 @@ final case class DocSinkCommit(files: Seq[String]) extends WriterCommitMessage
 final class DocSinkWriterFactory(dir: String, jobId: String,
                                  filenameIdx: Int, contentIdx: Int,
                                  bundleDocs: Int,
-                                 conf: SerializableConfiguration)
+                                 conf: Broadcast[SerializableConfiguration])
     extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
     new DocSinkWriter(dir, jobId, partitionId, taskId, filenameIdx, contentIdx,
-      bundleDocs, conf)
+      bundleDocs, conf.value)
 }
 
 final class DocSinkWriter(dir: String, jobId: String,

@@ -4,13 +4,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
 
-import graft.kernel.ConvertKernel
-import graft.kernel.ConvertKernel.{ConversionConfig, UploadRow}
+import graft.kernel.ConvertKernel.{ConversionConfig, FileOptions}
 
 /** Structured Streaming plane (SURVEY.md §2.2 streaming row, §3.2 Spark
   * mapping): the reference's Celery queue is a stream of job requests; here
   * both the jobs plane and event-time analytics are readStream →
-  * transform → writeStream with watermarks.
+  * transform → writeStream with watermarks. The conversion inbox streams
+  * a file manifest and converts each micro-batch through the same
+  * `docling` scan as Pipeline.convertDirectory.
   */
 object EventStreams {
 
@@ -211,13 +212,12 @@ object EventStreams {
   def conversionCatchUp(spark: SparkSession, inboxDir: String, outDir: String,
                         checkpointDir: String,
                         config: ConversionConfig = ConversionConfig(),
-                        batchMode: Boolean = false,
-                        maxFilesPerTrigger: Option[Int] = None): StreamingQuery =
+                        batchMode: Boolean = false): StreamingQuery =
     conversionStreamWith(spark, inboxDir, outDir, checkpointDir, config,
-      Trigger.AvailableNow(), batchMode, maxFilesPerTrigger)
+      Trigger.AvailableNow(), batchMode)
 
   /** Streaming jobs plane: watch an inbox directory of binary documents and
-    * convert each micro-batch through the mapPartitions kernel — the
+    * convert each micro-batch through the `docling` scan — the
     * readStream→foreachBatch analog of the Celery worker loop (§3.2).
     * Returns the running query; results append as JSON under `outDir`. */
   def conversionStream(spark: SparkSession, inboxDir: String, outDir: String,
@@ -229,89 +229,47 @@ object EventStreams {
   private def conversionStreamWith(spark: SparkSession, inboxDir: String, outDir: String,
                                    checkpointDir: String, config: ConversionConfig,
                                    trigger: Trigger,
-                                   batchMode: Boolean,
-                                   maxFilesPerTrigger: Option[Int] = None): StreamingQuery = {
-    import spark.implicits._
+                                   batchMode: Boolean): StreamingQuery = {
     // MANIFEST-ONLY stream: the streaming plan carries (path, length) and
     // never `content`. Two scale reasons, both measured round 14 (sf0.01
     // probe; see SCALING.md):
     //  1. The file-stream source plans ONE PARTITION PER FILE — it never
-    //     bin-packs the way the batch reader's maxPartitionBytes does —
-    //     so a 5,000-doc inbox batch is 5,000 tiny tasks no matter what
-    //     the user function does. With content in the schema each of
-    //     those tasks reads its file's bytes (~290 s of task-time at
-    //     sf0.1); pruned to path+length they are metadata-only.
+    //     bin-packs the way a batch scan does — so a 5,000-doc inbox
+    //     batch is 5,000 tiny tasks no matter what the user function
+    //     does. With content in the schema each of those tasks reads its
+    //     file's bytes (~290 s of task-time at sf0.1); pruned to
+    //     path+length they are metadata-only.
     //  2. Spark 4.1's ForeachBatchSink EAGERLY materializes the
     //     micro-batch plan once BEFORE calling the user function, and
     //     the DataFrame it hands over re-executes that plan again per
     //     action — content in the streaming schema is therefore read
     //     once and thrown away, then read again. Streaming the manifest
     //     and batch-reading the payload inside foreachBatch reads every
-    //     payload byte exactly once, through a bin-packed batch scan.
-    val reader = spark.readStream
+    //     payload byte exactly once, through the core-sized docling scan.
+    val options = FileOptions(config, batchMode = batchMode).toOptions
+    spark.readStream
       .format("binaryFile")
       .schema("path STRING, modificationTime TIMESTAMP, length LONG, content BINARY")
-    // cadence knob for the SCALING floor decomposition (round 14):
-    // result is trigger-slicing-invariant (append sink, stateless
-    // kernel), only the per-trigger overhead moves
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    val stream = reader
       .load(inboxDir)
       .select(col("path"), col("length"))
-
-    stream.writeStream
+      .writeStream
       .outputMode(OutputMode.Append)
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val s = batch.sparkSession
-        val sc = s.sparkContext
-        val par = sc.defaultParallelism
-        // Collect the batch's manifest ((path, length) only — bounded by
-        // the trigger's admission control, not the table size; the
-        // coalesce keeps the collect at core-count tasks since the
-        // handed frame re-executes the per-file-partition streaming RDD
-        // otherwise). Payload bytes are then read INSIDE the kernel
-        // tasks from an LPT size-packed bucket list: no second file
-        // listing (a batch binaryFile read over N explicit paths spawns
-        // an N-task InMemoryFileIndex listing job before it scans), no
-        // second content read, ~one balanced task per core, and one
-        // JSON output part per core per batch.
-        val manifest = batch.coalesce(par)
-          .select(col("path"), col("length"))
-          .as(org.apache.spark.sql.Encoders.tuple(
-            org.apache.spark.sql.Encoders.STRING, org.apache.spark.sql.Encoders.scalaLong))
+        // Collect the batch's paths (bounded by the trigger's admission
+        // control, not the table size; the coalesce keeps the collect at
+        // core-count tasks since the handed frame re-executes the
+        // per-file-partition streaming RDD otherwise). The docling scan
+        // then plans the explicit paths into LPT buckets: no second
+        // directory listing, one content read per file.
+        val paths = batch.coalesce(s.sparkContext.defaultParallelism)
+          .select(col("path")).as(org.apache.spark.sql.Encoders.STRING)
           .collect()
-        if (manifest.nonEmpty) {
-          // LPT greedy packing: largest file first onto the lightest
-          // bucket — the classic (4/3 − 1/3k)·OPT makespan bound, so
-          // one huge upload can't straggle a whole wave behind it.
-          val k = math.min(par, manifest.length)
-          val heap = scala.collection.mutable.PriorityQueue
-            .tabulate(k)(i => (0L, i))(Ordering.by[(Long, Int), Long](_._1).reverse)
-          val buckets = Array.fill(k)(Vector.newBuilder[(String, Long)])
-          manifest.sortBy(-_._2).foreach { case (path, len) =>
-            val (load, i) = heap.dequeue()
-            buckets(i) += ((path, len))
-            heap.enqueue((load + math.max(len, 1L), i))
-          }
-          val hconf = sc.broadcast(new org.apache.spark.util.SerializableConfiguration(
-            s.sessionState.newHadoopConf()))
-          val rows = s.createDataset(
-            sc.parallelize(buckets.map(_.result()).toIndexedSeq, k).flatMap { bucket =>
-              bucket.iterator.map { case (path, len) =>
-                val p = new org.apache.hadoop.fs.Path(path)
-                val fs = p.getFileSystem(hconf.value.value)
-                val bytes = new Array[Byte](len.toInt)
-                val in = fs.open(p)
-                try in.readFully(0L, bytes) finally in.close()
-                UploadRow(path, path.substring(path.lastIndexOf('/') + 1),
-                  bytes, len)
-              }
-            })
-          ConvertKernel.convert(rows, config, batchMode).toDF()
+        if (paths.nonEmpty)
+          s.read.format("docling").options(options).load(paths.toIndexedSeq: _*)
             .write.mode("append").json(outDir)
-        }
         ()
       }
       .start()

@@ -603,14 +603,9 @@ object StreamQueries {
         // carry the FULL filename; single mode stems them — the
         // reference's §3.2/§3.3 asymmetry), so k1's oracle applies
         // verbatim
-        // dev-only cadence knob (SCALING round 14 floor decomposition);
-        // unset for the driver — the default file-source slicing stands
-        val fpt = sys.props.get("graft.st9.filesPerTrigger")
-          .orElse(sys.env.get("SPARK_GRAFT_ST9_FPT")).map(_.toInt)
         val q = EventStreams.conversionCatchUp(
           s, corpus, s"$runDir/out", s"$runDir/chk",
-          graft.kernel.ConvertKernel.ConversionConfig(), batchMode = true,
-          maxFilesPerTrigger = fpt)
+          graft.kernel.ConvertKernel.ConversionConfig(), batchMode = true)
         q.awaitTermination()
         lastRunProgress = q.recentProgress
         s.read.schema(

@@ -2,13 +2,13 @@ package graft.ingest
 
 import java.nio.charset.StandardCharsets
 
-import graft.SparkTestBase
+import org.scalatest.funsuite.AnyFunSuite
 
 /** Port of the reference's tests/test_file_format_detection.py:8-57 (same
   * cases, same expected formats — O5/O6/O7), plus engine-side adversarial
-  * cases and the scalar-vs-Column agreement check.
+  * cases.
   */
-class FormatDetectionSpec extends SparkTestBase {
+class FormatDetectionSpec extends AnyFunSuite {
 
   import FormatDetection._
 
@@ -102,19 +102,10 @@ class FormatDetectionSpec extends SparkTestBase {
   }
 
   test("zip classification scans 4 KB in BOTH paths (real OOXML puts word/ past 1 KB)") {
-    import org.apache.spark.sql.functions.col
     // [Content_Types].xml-style 2 KB preamble before the word/ entry name
     val content = Array[Byte]('P', 'K', 3, 4, 0, 0) ++
       Array.fill[Byte](2048)('x') ++ b("word/document.xml rest")
     assert(guessFormat(content, "f.bin") == Some("docx"))
-    val df = spark.createDataFrame(
-      spark.sparkContext.parallelize(Seq(org.apache.spark.sql.Row(content, "f.bin"))),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("content", org.apache.spark.sql.types.BinaryType),
-        org.apache.spark.sql.types.StructField("filename", org.apache.spark.sql.types.StringType))))
-    val got = df.select(detectFormatCol(col("content"), col("filename")).as("fmt"))
-      .collect().head.getString(0)
-    assert(got == "docx")
   }
 
   test("extension fallback is case-sensitive, skips dotfiles and trailing dots (reference rsplit)") {
@@ -129,121 +120,5 @@ class FormatDetectionSpec extends SparkTestBase {
     val bmp15 = b("BM") ++ Array.fill[Byte](13)(0)
     assert(sniffMime(bmp14).isEmpty) // 14 bytes: header alone is not a BMP
     assert(sniffMime(bmp15) == Some("image/bmp"))
-  }
-
-  // ---- scalar vs Column agreement (detectFormatCol is the relational
-  // ingest path; the kernel path is guessFormat — they must agree) ----
-
-  test("detectFormatCol agrees with guessFormat on 300 seeded-random inputs") {
-    import org.apache.spark.sql.functions.col
-    val rnd = new scala.util.Random(42)
-    val magics: Seq[Array[Byte]] = Seq(
-      "%PDF".getBytes, "PK".getBytes(StandardCharsets.ISO_8859_1),
-      "ID3".getBytes, "RIFF".getBytes, "OggS".getBytes, "fLaC".getBytes,
-      "MZ".getBytes, "BM".getBytes, "GIF8".getBytes,
-      Array(0x1F.toByte, 0x8B.toByte), Array(0xFF.toByte, 0xFB.toByte),
-      Array(0xFF.toByte, 0xD8.toByte, 0xFF.toByte), Array.emptyByteArray)
-    val exts = Seq(".csv", ".CSV", ".md", ".MD", ".adoc", ".html", ".pdf",
-      ".bin", "", ".", ".unknown")
-    val cases: Seq[(Array[Byte], String)] = (0 until 300).map { i =>
-      val body = Array.fill[Byte](rnd.nextInt(32))((rnd.nextInt(256) - 128).toByte)
-      // no "<!--" prefixes are generated: comment-stripping before the
-      // html sniff is the one documented scalar/Column divergence
-      val content = magics(rnd.nextInt(magics.length)) ++ body
-      val name = "f" + i + exts(rnd.nextInt(exts.length))
-      (content, name)
-    }
-    val expected = cases.map { case (c, n) => guessFormat(c, n) }
-    val df = spark.createDataFrame(
-      spark.sparkContext.parallelize(cases.zipWithIndex.map { case ((c, n), i) =>
-        org.apache.spark.sql.Row(i, c, n)
-      }),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("i", org.apache.spark.sql.types.IntegerType),
-        org.apache.spark.sql.types.StructField("content", org.apache.spark.sql.types.BinaryType),
-        org.apache.spark.sql.types.StructField("filename", org.apache.spark.sql.types.StringType))))
-    val got = df.select(col("i"), detectFormatCol(col("content"), col("filename")).as("fmt"))
-      .collect().sortBy(_.getInt(0)).map(r => Option(r.getString(1)))
-    cases.indices.foreach { i =>
-      assert(got(i) == expected(i),
-        s"case $i (${cases(i)._2}, ${cases(i)._1.take(6).mkString(",")}): " +
-          s"column=${got(i)} scalar=${expected(i)}")
-    }
-  }
-
-  test("detectFormatCol agrees with guessFormat on a branch-covering corpus") {
-    import org.apache.spark.sql.functions.col
-    val pngMagic = Array(0x89.toByte, 'P'.toByte, 'N'.toByte, 'G'.toByte,
-      0x0D.toByte, 0x0A.toByte, 0x1A.toByte, 0x0A.toByte)
-    val cases: Seq[(Array[Byte], String)] = Seq(
-      (b("name,value"), "data.csv"),
-      (b("name,value"), "DATA.CSV"),
-      (b("%PDF-1.7 ..."), "doc.bin"),
-      (pngMagic ++ b("rest"), "img.dat"),
-      (Array(0xFF.toByte, 0xD8.toByte, 0xFF.toByte, 0xE0.toByte), "photo"),
-      (b("GIF89a,,,"), "anim.x"),
-      (Array[Byte]('I', 'I', 0x2A, 0x00) ++ b("rest"), "scan.y"),
-      (Array[Byte]('M', 'M', 0x00, 0x2A) ++ b("rest"), "scan.z"),
-      (b("BM") ++ Array.fill[Byte](10)(0), "tiny.bmp-ish"), // 12 bytes: too short
-      (b("BM") ++ Array.fill[Byte](20)(0), "ok.bmp-ish"),
-      (Array[Byte]('P', 'K', 3, 4) ++ b("..word/document.xml"), "d.docx"),
-      (Array[Byte]('P', 'K', 3, 4) ++ b("..ppt/slides/x"), "p.pptx"),
-      (Array[Byte]('P', 'K', 3, 4) ++ b("..META-INF/x"), "z.zip"),
-      (b("ID3") ++ Array[Byte](4) ++ b("tag"), "song.md"),
-      (Array(0xFF.toByte, 0xFB.toByte, 0x40.toByte), "song2.md"),
-      (b("RIFF1234WAVEdata"), "a.html"),
-      (b("RIFF1234WEBPVP8 "), "a.md"),
-      (b("OggSxxxx"), "a.adoc"),
-      (b("fLaCxxxx"), "b.adoc"),
-      (b("1234ftypmp42more"), "v.md"),
-      (b("MZ") ++ Array[Byte](0x90.toByte, 0), "prog.html"),
-      (Array(0x7F.toByte, 'E'.toByte, 'L'.toByte, 'F'.toByte, 1.toByte), "bin.md"),
-      (Array(0x1F.toByte, 0x8B.toByte, 8.toByte), "t.adoc"),
-      (Array[Byte]('7', 'z', 0xBC.toByte, 0xAF.toByte) ++ b("rest"), "x.md"),
-      (b("Rar!") ++ Array[Byte](0x1A, 0x07), "x.html"),
-      (b("plain text"), "guide.adoc"),
-      (b("plain text"), "guide.asciidoc"),
-      (b("plain text"), "guide.asc"),
-      (b("plain text"), "page.html"),
-      (b("plain text"), "page.htm"),
-      (b("plain text"), "page.xhtml"),
-      (b("plain text"), "README.md"),
-      (b("plain text"), "README.MD"),
-      (b("plain text"), ".hidden.md"),
-      (b("plain text"), "name.md."),
-      (b("plain text"), "a.b.md"),
-      (b("<!doctype html><html>"), "f.unknown"),
-      (b("  <html lang=en>"), "f.unknown"),
-      (b("<head><title>t</title>"), "f.unknown"),
-      (b("<body>x</body>"), "f.unknown"),
-      (b("""<?xml version="1.0"?><html xmlns="http://www.w3.org/1999/xhtml">"""), "f.unknown"),
-      (b("""<?xml version="1.0"?><note></note>"""), "f.unknown"),
-      // comment-prefixed HTML: the r2 divergence case — the scalar path
-      // strips XML comments before the sniff and the Column path must too
-      (b("<!-- c --><html>"), "f.unknown"),
-      (b("<!-- a --><!-- b -->  <!doctype html>"), "f.unknown"),
-      (b("<!-- multi\nline\ncomment --><body>x</body>"), "f.unknown"),
-      (b("<!-- unterminated comment <html>"), "f.unknown"),
-      (b("just some words"), "f.unknown"),
-      (Array.emptyByteArray, "empty.md"),
-      (Array.emptyByteArray, "empty.unknown"))
-
-    val expected = cases.map { case (content, name) => guessFormat(content, name) }
-
-    val df = spark.createDataFrame(
-      spark.sparkContext.parallelize(cases.zipWithIndex.map { case ((content, name), i) =>
-        org.apache.spark.sql.Row(i, content, name)
-      }),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("i", org.apache.spark.sql.types.IntegerType),
-        org.apache.spark.sql.types.StructField("content", org.apache.spark.sql.types.BinaryType),
-        org.apache.spark.sql.types.StructField("filename", org.apache.spark.sql.types.StringType))))
-    val got = df.select(col("i"), detectFormatCol(col("content"), col("filename")).as("fmt"))
-      .collect().sortBy(_.getInt(0)).map(r => Option(r.getString(1)))
-
-    cases.indices.foreach { i =>
-      assert(got(i) == expected(i),
-        s"case $i (${cases(i)._2}): column=${got(i)} scalar=${expected(i)}")
-    }
   }
 }

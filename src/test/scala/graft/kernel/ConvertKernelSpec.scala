@@ -6,14 +6,15 @@ import java.util.Base64
 
 import javax.imageio.ImageIO
 
-import graft.SparkTestBase
+import org.scalatest.funsuite.AnyFunSuite
+
 import graft.kernel.ConvertKernel._
 
 /** Golden e2e for the conversion kernel (O8-O17): fixture bytes in, exact
   * ConversionResult out — the e2e coverage the reference itself lacks
   * (SURVEY §5.1 "untested in the reference").
   */
-class ConvertKernelSpec extends SparkTestBase {
+class ConvertKernelSpec extends AnyFunSuite {
 
   private def b(s: String): Array[Byte] = s.getBytes(StandardCharsets.UTF_8)
 
@@ -288,17 +289,14 @@ class ConvertKernelSpec extends SparkTestBase {
     assert(e.getMessage.contains("Unsupported file format"))
   }
 
-  test("distributed convert matches per-row convertOne and isolates errors (O9/O10)") {
-    import spark.implicits._
-    val rows = Seq(
-      UploadRow("/in/a.md", "a.md", b("# A"), 3),
-      UploadRow("/in/bad.pdf", "bad.pdf", b("%PDF-junk"), 9),
-      UploadRow("/in/c.csv", "c.csv", b("x,y\n1,2\n"), 8))
-    val got = ConvertKernel.convert(spark.createDataset(rows), batchMode = true)
-      .collect().sortBy(_.filename)
-    val want = rows.map(r => convertOne(r.filename, r.content, batchMode = true))
-      .sortBy(_.filename)
-    assert(got.toSeq == want)
-    assert(got.count(_.error != null) == 1) // one failure never poisons the batch
+  test("FileOptions round-trip through their string form; absent keys default") {
+    val o = FileOptions(
+      ConversionConfig(extractTablesAsImages = true, imageResolutionScale = 2,
+        outputFormat = "json", ocrEngine = Some(OcrEngines.Deterministic)),
+      maxFileMb = 7, batchMode = false)
+    assert(FileOptions.fromOptions(o.toOptions) == o)
+    assert(FileOptions.fromOptions(Map("MAXFILEMB" -> "3")) == FileOptions(maxFileMb = 3))
+    intercept[IllegalArgumentException](
+      FileOptions.fromOptions(Map("imageResolutionScale" -> "9")))
   }
 }

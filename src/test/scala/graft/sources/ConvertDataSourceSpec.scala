@@ -52,22 +52,30 @@ class ConvertDataSourceSpec extends SparkTestBase {
       s"expected +3 kernel calls, got +${ConvertDataSource.kernelCalls.get() - before}")
   }
 
-  test("input partitions bin-pack by file count and isolate oversized files") {
-    val dir = Files.createTempDirectory("graft-dsv2-pack")
-    (1 to 10).foreach(i =>
-      Files.write(dir.resolve(f"d$i%02d.md"), s"# $i".getBytes(StandardCharsets.UTF_8)))
-    val packed = spark.read.format("docling")
-      .option("maxFilesPerPartition", 3).load(dir.toString)
-      .rdd.getNumPartitions
-    assert(packed == 4, s"ceil(10/3) partitions expected, got $packed")
+  test("_ and . files are skipped by the scan and the pipeline alike") {
+    val dir = Files.createTempDirectory("graft-dsv2-hidden")
+    Files.write(dir.resolve("a.md"), "# A".getBytes(StandardCharsets.UTF_8))
+    Files.write(dir.resolve("_SUCCESS"), Array.emptyByteArray)
+    Files.write(dir.resolve(".hidden.md"), "# H".getBytes(StandardCharsets.UTF_8))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select($"filename", $"markdown", $"error").collect().map(_.toSeq).toSet
+    val viaSource = rows(spark.read.format("docling").load(dir.toString))
+    assert(viaSource == rows(graft.Pipeline.convertDirectory(spark, dir.toString)))
+    assert(viaSource == Set(Seq("a", "# A", null)))
+  }
 
-    // a file above the byte target (4 MB default) gets its own partition
-    Files.write(dir.resolve("zz_big.md"),
-      ("# b\n\n" + "x" * (5 * 1024 * 1024)).getBytes(StandardCharsets.UTF_8))
-    val isolated = spark.read.format("docling")
-      .option("maxFilesPerPartition", 100).load(dir.toString)
-      .rdd.getNumPartitions
-    assert(isolated == 2, s"tiny pack + isolated big expected, got $isolated")
+  test("scan rows equal convertOne per file (batch mode, error rows)") {
+    val dir = Files.createTempDirectory("graft-dsv2-kernel")
+    val files = Seq("a.md" -> "# A", "bad.pdf" -> "%PDF-junk", "c.csv" -> "x,y\n1,2\n")
+      .map { case (n, c) => n -> c.getBytes(StandardCharsets.UTF_8) }
+    files.foreach { case (n, bytes) => Files.write(dir.resolve(n), bytes) }
+    val got = spark.read.format("docling").load(dir.toString)
+      .as[graft.kernel.ConvertKernel.ConversionResult].collect().sortBy(_.filename)
+    val want = files.map { case (n, bytes) =>
+      graft.kernel.ConvertKernel.convertOne(n, bytes, batchMode = true)
+    }.sortBy(_.filename)
+    assert(got.toSeq == want)
+    assert(got.count(_.error != null) == 1) // one failure never poisons the batch
   }
 
   test("SQL DDL reaches the connector: CREATE TEMP VIEW ... USING docling") {
@@ -80,26 +88,31 @@ class ConvertDataSourceSpec extends SparkTestBase {
     assert(got == Seq(("a", true), ("b", true), ("weird.xyz", false)))
   }
 
-  test("packing invariants hold on random size lists (property)") {
+  test("LPT plan: each file once, min(n, k) buckets, makespan bound") {
     val gen = new scala.util.Random(42)
     (1 to 300).foreach { _ =>
-      val n = gen.nextInt(40)
-      val files = (0 until n).map(i => (s"f$i", gen.nextInt(1000).toLong))
-      val target = 1 + gen.nextInt(2000)
-      val maxFiles = 1 + gen.nextInt(8)
-      val parts = ConvertDataSource.pack(files, target.toLong, maxFiles)
-      // every file exactly once, input order preserved
-      assert(parts.flatten == files, s"coverage/order broke: $files -> $parts")
-      parts.foreach { p =>
-        assert(p.nonEmpty && p.length <= maxFiles)
-        // byte bound applies to multi-file partitions (each append
-        // checked the running total); an oversized file is allowed only
-        // as a singleton
-        if (p.length > 1)
-          assert(p.map(_._2).sum <= target,
-            s"multi-file partition over byte target: $p target=$target")
+      val n = gen.nextInt(60)
+      val files = (0 until n).map(i => (s"f$i", 1L + gen.nextInt(1000)))
+      val buckets = 1 + gen.nextInt(16)
+      val parts = ConvertDataSource.plan(files, buckets)
+      assert(parts.flatten.sorted == files.sorted, s"coverage broke: $files -> $parts")
+      val k = math.min(n, buckets)
+      assert(parts.length == k && parts.forall(_.nonEmpty))
+      if (n > 0) {
+        val loads = parts.map(_.map(_._2).sum)
+        assert(loads.max <= files.map(_._2).sum.toDouble / k + files.map(_._2).max,
+          s"LPT bound broke: loads=$loads")
       }
     }
+  }
+
+  test("LPT plan places largest first; empty files weigh 1") {
+    val files = Seq(("small", 1L), ("big1", 100L), ("big2", 90L), ("mid", 50L))
+    val parts = ConvertDataSource.plan(files, 2)
+    assert(parts == Seq(Vector(("big1", 100L), ("small", 1L)),
+      Vector(("big2", 90L), ("mid", 50L))))
+    val empties = (0 until 6).map(i => (s"e$i", 0L))
+    assert(ConvertDataSource.plan(empties, 3).map(_.length) == Seq(2, 2, 2))
   }
 
   test("options thread through: maxFileMb 413s oversized files in-scan") {
@@ -123,7 +136,7 @@ class ConvertDataSourceSpec extends SparkTestBase {
     val files = dir.toFile.listFiles().sortBy(_.getName)
       .map(f => (f.getAbsolutePath, f.length())).toVector
     val reader = new ConvertReader(ConvertInputPartition(files),
-      ConvertDataSource.schema, Map.empty,
+      ConvertDataSource.schema, graft.kernel.ConvertKernel.FileOptions(),
       spark.sessionState.newHadoopConf())
     val schema = ConvertDataSource.schema
     def imageB64(row: org.apache.spark.sql.catalyst.InternalRow): String = {
