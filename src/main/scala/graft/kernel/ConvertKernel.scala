@@ -282,13 +282,4 @@ object ConvertKernel {
           s"Conversion failed: ${e.getMessage}")
     }
   }
-
-  /** Sync-single semantics (service.py:195-199): error escalates as an
-    * exception at the API layer instead of an error row. */
-  def convertDocumentOrThrow(filename: String, content: Array[Byte],
-                             config: ConversionConfig = ConversionConfig()): ConversionResult = {
-    val r = convertOne(filename, content, config)
-    if (r.error != null) throw new RuntimeException(r.error)
-    r
-  }
 }

@@ -32,7 +32,9 @@ import graft.kernel.DocModel._
   */
 object OoxmlParsers {
 
-  private val MaxEntryBytes = 64 << 20 // zip-bomb guard per part
+  /** Decompression-bomb guard: the most bytes one zip part (or one PDF
+    * Flate stream, which shares it) may inflate to. */
+  private[kernel] val MaxEntryBytes = 64 << 20
 
   /** Read selected entries of a zip (by predicate on the entry name). */
   private[kernel] def zipEntries(bytes: Array[Byte],
@@ -57,12 +59,20 @@ object OoxmlParsers {
     out.result()
   }
 
-  private def newReader(bytes: Array[Byte]): XMLStreamReader = {
-    val f = XMLInputFactory.newInstance()
+  // The JDK's own StAX implementation, chosen explicitly: newInstance()
+  // is a ServiceLoader scan per call whose answer depends on the classpath
+  // (Spark's carries Hadoop's shaded Woodstox). Configured once, with DTDs
+  // and external entities off, and kept per thread because a factory is
+  // not guaranteed thread-safe.
+  private val xmlFactory: ThreadLocal[XMLInputFactory] = ThreadLocal.withInitial { () =>
+    val f = XMLInputFactory.newDefaultFactory()
     f.setProperty(XMLInputFactory.SUPPORT_DTD, false)
     f.setProperty(XMLInputFactory.IS_SUPPORTING_EXTERNAL_ENTITIES, false)
-    f.createXMLStreamReader(new ByteArrayInputStream(bytes))
+    f
   }
+
+  private def newReader(bytes: Array[Byte]): XMLStreamReader =
+    xmlFactory.get().createXMLStreamReader(new ByteArrayInputStream(bytes))
 
   private def attr(r: XMLStreamReader, local: String): Option[String] =
     (0 until r.getAttributeCount)

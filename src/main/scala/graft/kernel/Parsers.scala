@@ -177,11 +177,17 @@ object Parsers {
     * styles are dropped. */
   object HtmlParser extends FormatParser {
     private val TagOrText = "(?s)<[^>]*>|[^<]+".r
+    private val Comment = "(?s)<!--.*?-->".r
+    private val ScriptOrStyle = "(?is)<(script|style)[^>]*>.*?</\\1>".r
+    private val Href = "(?i)href\\s*=\\s*[\"']([^\"']*)[\"']".r
+    private val Colspan = spanAttr("colspan")
+    private val Rowspan = spanAttr("rowspan")
+    private def spanAttr(attr: String) = s"""(?i)$attr\\s*=\\s*["']?(\\d+)""".r
 
     def parse(name: String, bytes: Array[Byte]): Either[String, DocTree] = {
       val raw = text(bytes)
-      val noComments = "(?s)<!--.*?-->".r.replaceAllIn(raw, "")
-      val noScripts = "(?is)<(script|style)[^>]*>.*?</\\1>".r.replaceAllIn(noComments, "")
+      val noComments = Comment.replaceAllIn(raw, "")
+      val noScripts = ScriptOrStyle.replaceAllIn(noComments, "")
 
       val items = ArrayBuffer[Element]()
       var headingLevel = 0
@@ -297,8 +303,7 @@ object Parsers {
               if (isClose) {
                 if (linkHref.nonEmpty) { buf ++= s"](${linkHref.get})"; linkHref = None }
               } else {
-                linkHref = "(?i)href\\s*=\\s*[\"']([^\"']*)[\"']".r
-                  .findFirstMatchIn(tok).map(_.group(1))
+                linkHref = Href.findFirstMatchIn(tok).map(_.group(1))
                 if (linkHref.nonEmpty) buf += '['
               }
             case "img" =>
@@ -325,12 +330,11 @@ object Parsers {
                 if (isClose) flushCell()
                 else {
                   flushCell(); inCell = true
-                  def span(attr: String): Int =
-                    s"""(?i)$attr\\s*=\\s*["']?(\\d+)""".r
-                      .findFirstMatchIn(tok).map(_.group(1).toInt)
+                  def span(re: scala.util.matching.Regex): Int =
+                    re.findFirstMatchIn(tok).map(_.group(1).toInt)
                       .filter(_ >= 1).getOrElse(1)
-                  cellColspan = span("colspan")
-                  cellRowspan = span("rowspan")
+                  cellColspan = span(Colspan)
+                  cellRowspan = span(Rowspan)
                 }
               } else if (tableDepth > 1 && inCell && cellBuf.nonEmpty)
                 cellBuf += ' ' // inner-table cell boundary → word gap

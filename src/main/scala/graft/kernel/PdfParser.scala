@@ -215,20 +215,25 @@ object PdfParser extends FormatParser {
     b.take(end)
   }
 
-  private def inflate(data: Array[Byte]): Option[Array[Byte]] = {
+  /** A Flate stream's bytes, or None when it is corrupt, needs a preset
+    * dictionary, or inflates past [[OoxmlParsers.MaxEntryBytes]] (a
+    * decompression bomb). The native inflater is released on every path. */
+  private[kernel] def inflate(data: Array[Byte]): Option[Array[Byte]] = {
+    val inf = new Inflater()
     try {
-      val inf = new Inflater()
       inf.setInput(data)
       val out = new ByteArrayOutputStream()
       val buf = new Array[Byte](8192)
       while (!inf.finished() && !inf.needsInput()) {
         val n = inf.inflate(buf)
-        if (n > 0) out.write(buf, 0, n)
-        else if (n == 0 && inf.needsDictionary()) return None
+        if (n > 0) {
+          if (out.size + n > OoxmlParsers.MaxEntryBytes) return None
+          out.write(buf, 0, n)
+        } else if (inf.needsDictionary()) return None
       }
-      inf.end()
       Some(out.toByteArray)
     } catch { case _: Exception => None }
+    finally inf.end()
   }
 
   // ------------------------------------------------------------------ fonts

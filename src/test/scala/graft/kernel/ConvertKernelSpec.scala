@@ -282,13 +282,6 @@ class ConvertKernelSpec extends AnyFunSuite {
     assert(r.error == s"Unsupported file format: blob.xyz")
   }
 
-  test("convertDocumentOrThrow escalates errors like the sync endpoint (O17)") {
-    val ok = convertDocumentOrThrow("fine.md", b("# ok"))
-    assert(ok.markdown == "# ok")
-    val e = intercept[RuntimeException](convertDocumentOrThrow("blob.xyz", b("junk")))
-    assert(e.getMessage.contains("Unsupported file format"))
-  }
-
   test("FileOptions round-trip through their string form; absent keys default") {
     val o = FileOptions(
       ConversionConfig(extractTablesAsImages = true, imageResolutionScale = 2,

@@ -4,10 +4,11 @@ import java.awt.image.BufferedImage
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 import java.nio.ByteBuffer
 import java.nio.charset.StandardCharsets
-import java.util.zip.CRC32
+import java.util.zip.{CRC32, Deflater, Inflater}
 
 import javax.imageio.ImageIO
 
+import org.scalacheck.{Gen, Prop, Test}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the PNG writer behind every kernel image: decoded pixels equal
@@ -15,7 +16,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * ImageIO's PNG writer — kept here as the reference) across source
   * codecs, raster types, scales 1-4 and the MaxDim clamp; the container
   * is well-formed (IHDR first, colour type 2 or 6 by alpha, valid CRCs)
-  * and the output is a pure function of the input. */
+  * and the output is a pure function of the input. The IDAT stream is
+  * also checked byte for byte (Adler-32 included) against the filtered
+  * scanlines built here independently, and its size against
+  * `Deflater(BEST_SPEED)` over those same scanlines. */
 class ImageRendererSpec extends AnyFunSuite {
 
   private val MaxDim = 4096
@@ -174,5 +178,154 @@ class ImageRendererSpec extends AnyFunSuite {
     assert(img.getRGB(0, 0) == 0xFF808080)
     assert(img.getRGB(63, 47) == 0xFF808080)
     assert(img.getRGB(32, 24) == 0xFFFFFFFF)
+  }
+
+  // ------------------------------------------------ the IDAT deflate stream
+
+  /** The scanlines writePng promises, built the plain way: per source row
+    * a Sub row with every pixel repeated `factor` times, then `factor − 1`
+    * all-zero Up rows; RGB when every alpha is 0xFF, else RGBA. */
+  private def filtered(argb: Array[Int], w: Int, h: Int, factor: Int): Array[Byte] = {
+    val bpp = if (argb.take(w * h).forall(_ >>> 24 == 0xFF)) 3 else 4
+    val out = new ByteArrayOutputStream()
+    for (y <- 0 until h) {
+      out.write(1)
+      var left = 0
+      for (x <- 0 until w) {
+        val p = argb(y * w + x)
+        for (k <- 0 until factor) {
+          val q = if (k == 0) left else p
+          Seq(16, 8, 0).foreach(s => out.write((p >>> s) - (q >>> s)))
+          if (bpp == 4) out.write((p >>> 24) - (q >>> 24))
+        }
+        left = p
+      }
+      for (_ <- 1 until factor) { out.write(2); out.write(new Array[Byte](w * factor * bpp)) }
+    }
+    out.toByteArray
+  }
+
+  private def idat(png: Array[Byte]): Array[Byte] = {
+    val cs = chunks(png)
+    assert(cs.map(_.kind) == Seq("IHDR", "IDAT", "IEND"))
+    cs(1).data
+  }
+
+  /** The zlib stream's content; Inflater verifies the Adler-32. */
+  private def inflate(z: Array[Byte]): Array[Byte] = {
+    val inf = new Inflater()
+    try {
+      inf.setInput(z)
+      val out = new ByteArrayOutputStream()
+      val buf = new Array[Byte](1 << 16)
+      while (!inf.finished()) {
+        val n = inf.inflate(buf)
+        assert(n > 0 || !(inf.needsInput() || inf.needsDictionary()), "truncated zlib stream")
+        out.write(buf, 0, n)
+      }
+      assert(inf.getRemaining == 0, "bytes after the zlib stream")
+      out.toByteArray
+    } finally inf.end()
+  }
+
+  private def bestSpeedSize(data: Array[Byte]): Int = {
+    val d = new Deflater(Deflater.BEST_SPEED)
+    try {
+      d.setInput(data); d.finish()
+      val buf = new Array[Byte](1 << 16)
+      var n = 0
+      while (!d.finished()) n += d.deflate(buf)
+      n
+    } finally d.end()
+  }
+
+  private def roundTrips(argb: Array[Int], w: Int, h: Int, factor: Int): Boolean =
+    inflate(idat(ImageRenderer.writePng(argb, w, h, factor))).sameElements(filtered(argb, w, h, factor))
+
+  /** Seeded pixels of one kind: opaque noise, translucent noise, one flat
+    * colour, or two colours at random (so deltas repeat to the left,
+    * above and at random distances). */
+  private def pixels(kind: Int, w: Int, h: Int, seed: Long): Array[Int] = {
+    val rnd = new scala.util.Random(seed)
+    val (c0, c1) = (rnd.nextInt(), rnd.nextInt())
+    kind match {
+      case 0 => Array.fill(w * h)(0xFF000000 | rnd.nextInt())
+      case 1 => Array.fill(w * h)(rnd.nextInt())
+      case 2 => Array.fill(w * h)(c0)
+      case _ => Array.fill(w * h)(if (rnd.nextInt(4) == 0) c1 else c0)
+    }
+  }
+
+  test("IDAT inflates to the filtered scanlines for random rasters (property)") {
+    val prop = Prop.forAll(Gen.choose(1, 64), Gen.choose(1, 64), Gen.choose(1, 4),
+        Gen.choose(0, 3), Gen.long) { (w, h, factor, kind, seed) =>
+      Prop(roundTrips(pixels(kind, w, h, seed), w, h, factor)) :| s"${w}x$h factor $factor kind $kind seed $seed"
+    }
+    val res = Test.check(Test.Parameters.default.withMinSuccessfulTests(300), prop)
+    assert(res.passed, res.status)
+  }
+
+  test("4096-wide output rows: matches only inside the 32 KB window") {
+    // rows 0-2 and 4 repeat: the row above is 16385 bytes back at
+    // 4096 x 1 RGBA (legal), 32770 at 2048 x 2 and 65540 at 1024 x 4 (not)
+    for ((w, factor) <- Seq(4096 -> 1, 2048 -> 2, 1024 -> 4); kind <- 0 to 1) {
+      val a = pixels(kind, w, 1, w + kind).map(p => if ((p & 0x300) == 0) 0xFF123456 else p)
+      val b = pixels(kind, w, 1, 7L * w + kind)
+      val argb = Array(a, a, a, b, a).flatten
+      assert(roundTrips(argb, w, 5, factor), s"${w}x5 factor $factor kind $kind")
+    }
+  }
+
+  test("a raster spanning several deflate blocks round-trips") {
+    val (w, h) = (200, 200) // 160,000 literals for translucent noise
+    assert(w * h * 4 > 2 * ImageRenderer.BlockSymbols)
+    for (factor <- Seq(1, 3)) assert(roundTrips(pixels(1, w, h, 5), w, h, factor), s"factor $factor")
+  }
+
+  /** perfbench's Gen.raster: smooth gradients plus six solid blocks. */
+  private def gradient(w: Int, h: Int, seed: Long): Array[Int] = {
+    val rnd = new scala.util.Random(seed)
+    val (a, b, c) = (rnd.nextInt(256), rnd.nextInt(256), rnd.nextInt(256))
+    val px = Array.tabulate(w * h) { i =>
+      val (x, y) = (i % w, i / w)
+      0xFF000000 | (((a + x) & 0xFF) << 16) | (((b + y) & 0xFF) << 8) | ((c + x + y) & 0xFF)
+    }
+    for (_ <- 0 until 6) {
+      val col = 0xFF000000 | rnd.nextInt(1 << 24)
+      val (x0, y0) = (rnd.nextInt(w), rnd.nextInt(h))
+      val (bw, bh) = (1 + rnd.nextInt(w / 3 + 1), 1 + rnd.nextInt(h / 3 + 1))
+      for (y <- y0 until math.min(h, y0 + bh); x <- x0 until math.min(w, x0 + bw)) px(y * w + x) = col
+    }
+    px
+  }
+
+  /** Black 5x7 glyphs from a 26-shape alphabet on white, in lines of text. */
+  private def text(w: Int, h: Int, seed: Long): Array[Int] = {
+    val rnd = new scala.util.Random(seed)
+    val glyphs = Array.fill(26, 35)(rnd.nextInt(3) == 0)
+    val px = Array.fill(w * h)(0xFFFFFFFF)
+    for (line <- 2 until h - 7 by 11) {
+      var x = 2
+      while (x + 5 < w) {
+        if (rnd.nextInt(6) == 0) x += 4
+        else {
+          val g = glyphs(rnd.nextInt(26))
+          for (gy <- 0 until 7; gx <- 0 until 5 if g(gy * 5 + gx)) px((line + gy) * w + x + gx) = 0xFF000000
+          x += 6
+        }
+      }
+    }
+    px
+  }
+
+  test("IDAT is at most 10% larger than Deflater BEST_SPEED's") {
+    val (w, h) = (160, 120)
+    val rasters = Seq("gradient" -> gradient(w, h, 1), "noise" -> pixels(0, w, h, 2),
+      "flat" -> pixels(2, w, h, 3), "text" -> text(w, h, 4))
+    for ((name, argb) <- rasters; factor <- Seq(1, 4)) {
+      val got = idat(ImageRenderer.writePng(argb, w, h, factor)).length
+      val ref = bestSpeedSize(filtered(argb, w, h, factor))
+      assert(got <= 1.10 * ref, s"$name x$factor: $got bytes vs $ref")
+    }
   }
 }

@@ -958,4 +958,21 @@ class OoxmlParsersSpec extends AnyFunSuite {
     assert(OoxmlParsers.resolveTarget("ppt/slides", "../media/i.png") == "ppt/media/i.png")
     assert(OoxmlParsers.resolveTarget("ppt/slides", "/ppt/media/i.png") == "ppt/media/i.png")
   }
+
+  test("a DOCTYPE with an external entity is not resolved") {
+    val secret = java.nio.file.Files.createTempFile("xxe", ".txt")
+    try {
+      java.nio.file.Files.write(secret, "qzSECRETqz".getBytes(StandardCharsets.UTF_8))
+      val bytes = zip(
+        "[Content_Types].xml" -> "<Types/>",
+        "word/document.xml" ->
+          s"""<?xml version="1.0" encoding="UTF-8"?>
+             |<!DOCTYPE w:document [<!ENTITY xxe SYSTEM "${secret.toUri}">]>
+             |<w:document xmlns:w="$W"><w:body>${wp("before &xxe; after")}</w:body></w:document>""".stripMargin)
+      val r = convertOne("xxe.docx", bytes)
+      assert(r.markdown != null || r.error != null)
+      assert(!String.valueOf(r.markdown).contains("qzSECRETqz"), String.valueOf(r.markdown))
+      assert(!String.valueOf(r.error).contains("qzSECRETqz"), String.valueOf(r.error))
+    } finally java.nio.file.Files.delete(secret)
+  }
 }

@@ -76,6 +76,41 @@ class PdfParserSpec extends AnyFunSuite {
     assert(r.error != null && r.error.contains("OCR"))
   }
 
+  /** ~80 MB of zeros, deflated (about 80 KB): a flate bomb. */
+  private lazy val zeroBomb: Array[Byte] = {
+    val d = new Deflater()
+    val out = new ByteArrayOutputStream()
+    val zeros = new Array[Byte](1 << 20)
+    val buf = new Array[Byte](1 << 16)
+    try {
+      for (_ <- 0 until 80) {
+        d.setInput(zeros)
+        while (!d.needsInput()) out.write(buf, 0, d.deflate(buf))
+      }
+      d.finish()
+      while (!d.finished()) out.write(buf, 0, d.deflate(buf))
+    } finally d.end()
+    out.toByteArray
+  }
+
+  test("inflate gives up past the per-part cap instead of returning a flate bomb") {
+    assert(zeroBomb.length < 100 * 1024)
+    // compare lengths: a failure message must not print 80 MB of bytes
+    assert(PdfParser.inflate(zeroBomb).map(_.length).isEmpty)
+    assert(PdfParser.inflate(deflate("BT (ok) Tj ET")).map(new String(_, StandardCharsets.ISO_8859_1))
+      .contains("BT (ok) Tj ET"))
+  }
+
+  test("a pdf whose one content stream is a flate bomb converts to a row") {
+    val bos = new ByteArrayOutputStream()
+    bos.write(s"%PDF-1.4\n4 0 obj\n<< /Length ${zeroBomb.length} /Filter /FlateDecode >>\nstream\n"
+      .getBytes(StandardCharsets.ISO_8859_1))
+    bos.write(zeroBomb)
+    bos.write("\nendstream\nendobj\n%%EOF\n".getBytes(StandardCharsets.ISO_8859_1))
+    val r = convertOne("bomb.pdf", bos.toByteArray)
+    assert(r.markdown != null || r.error != null)
+  }
+
   test("pdf with no streams at all is an error row, not a throw") {
     val r = convertOne("empty.pdf", "%PDF-1.4\n%%EOF".getBytes)
     assert(r.error != null)
