@@ -36,8 +36,10 @@ import graft.kernel.ConvertKernel.{ConversionConfig, ConversionResult}
   * failures as `{"detail": ...}` with the reference's 400/413 texts, and
   * `response_model_exclude_unset` rendering (unset/None fields omitted
   * from JSON). Async jobs submit to the [[JobService.Ledger]] and convert
-  * on a background thread (the Celery-worker analog); status endpoints
-  * read the ledger with the unknown-id⇒IN_PROGRESS quirk intact.
+  * one at a time on a single background thread (the Celery-worker
+  * analog), which first drains the jobs a previous server left pending;
+  * status endpoints read the ledger with the unknown-id⇒IN_PROGRESS
+  * quirk intact.
   *
   * CORS (O23, main.py:20-30): `corsOrigins` is the comma-separated
   * CORS_ALLOW_ORIGINS string — split, trimmed, empties dropped, default
@@ -49,8 +51,9 @@ import graft.kernel.ConvertKernel.{ConversionConfig, ConversionResult}
   * Scale note: this is the DRIVER-EDGE of the engine, like the reference's
   * FastAPI front-end — uploads are bounded by the same byte accounting
   * (UploadValidation), conversion runs through the same kernel, and the
-  * async path hands off to the ledger that a Spark cluster drains. The
-  * HTTP layer holds no per-request state beyond the exchange. Every
+  * async path hands off to the ledger's worker thread, which runs the
+  * same kernel in-process. The HTTP layer holds no per-request state
+  * beyond the exchange. Every
   * accepted connection has TCP_NODELAY set, as uvicorn's asyncio
   * transport does for the reference: the JDK server writes the headers
   * and the body of a reply as two segments, and with Nagle's algorithm
@@ -239,6 +242,10 @@ object HttpApi {
 
   // --------------------------------------------------------------- server
 
+  /** How much of an over-cap request body is read and dropped before the
+    * 413, in multiples of the endpoint's payload budget. */
+  private val LingerBudgets = 4
+
   /** A running API server bound to `port` (0 = ephemeral; read the actual
     * one from `boundPort`). `ledgerRoot` hosts the async jobs ledger. */
   final class Server(spark: SparkSession, port: Int, ledgerRoot: String,
@@ -272,6 +279,9 @@ object HttpApi {
     def boundPort: Int = http.getAddress.getPort
 
     def start(): this.type = {
+      // jobs a previous server accepted but never finished; submits made
+      // from here on queue behind this drain on the one worker thread
+      workers.execute(() => ledger.processAllPending(spark))
       http.setExecutor(pool)
       http.createContext("/", handler)
       http.start()
@@ -281,6 +291,9 @@ object HttpApi {
     def stop(): Unit = {
       http.stop(0)
       pool.shutdownNow()
+      // interrupting a job mid-conversion is safe: its results land by
+      // atomic rename, so it leaves no results file and stays pending
+      // for the next start's drain
       workers.shutdownNow()
       ()
     }
@@ -349,6 +362,17 @@ object HttpApi {
       if (out.size > cap) None else Some(out.toByteArray)
     }
 
+    /** Lingering close: read and drop up to `limit` more body bytes. */
+    private def discard(in: java.io.InputStream, limit: Long): Unit = {
+      val buf = new Array[Byte](64 * 1024)
+      var left = limit
+      var n = 0
+      while (left > 0 && n >= 0) {
+        n = in.read(buf, 0, math.min(buf.length.toLong, left).toInt)
+        if (n > 0) left -= n
+      }
+    }
+
     /** None ⇒ the body overran the endpoint's cap and a 413 was already
       * sent — the single-doc endpoint caps at the FILE budget with the
       * file error text, the batch endpoint at the BATCH budget with the
@@ -362,6 +386,11 @@ object HttpApi {
         else UploadValidation.mbToBytes(maxFileMb)
       readBodyBounded(ex, budget) match {
         case None =>
+          // the JDK server drains only 64 KB of a body left unread, and a
+          // socket closed on unread data sends a TCP reset, which can
+          // destroy the 413 before the client reads it; the rest is
+          // dropped, not kept, and a body past the limit still gets reset
+          discard(ex.getRequestBody, LingerBudgets * budget)
           detail(ex, 413,
             if (batch) UploadValidation.batchTooLargeError(maxBatchMb)
             else UploadValidation.fileTooLargeError(maxFileMb))
@@ -460,11 +489,7 @@ object HttpApi {
           validated(ex, batch).foreach { docs =>
             val id = ledger.submit(docs, batch, config)
             // the Celery-worker analog: convert off the request thread
-            workers.submit(new Runnable {
-              def run(): Unit =
-                try ledger.process(spark, id, config)
-                catch { case _: Exception => () } // process records task failure
-            })
+            workers.execute(() => ledger.process(spark, id))
             val json =
               if (batch)
                 batchJobResultJson(JobService.BatchJobResult(id, Seq.empty, JobService.InProgress, None))

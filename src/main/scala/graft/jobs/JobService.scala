@@ -1,31 +1,34 @@
 package graft.jobs
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardOpenOption}
+import java.nio.file.{Files, Paths, StandardCopyOption, StandardOpenOption}
 import java.util.{Base64, UUID}
 
 import scala.jdk.CollectionConverters._
 
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.spark.sql.SparkSession
 
 import graft.kernel.ConvertKernel
-import graft.kernel.ConvertKernel.{ConversionConfig, ConversionResult}
+import graft.kernel.ConvertKernel.{ConversionConfig, ConversionResult, FileOptions, ImageData}
 
 /** Async job orchestration (SURVEY.md O18-O22) — the reference's
   * Celery/Redis plane (worker/tasks.py, service.py:204-273) re-expressed as
-  * a filesystem jobs ledger + Spark execution:
+  * a filesystem jobs ledger that its worker converts in-process:
   *
   *   submit  → payload bytes persisted as `<idx>.bin` under
   *             `<ledger>/requests/<job_id>/` with client filenames in a
   *             base64 `_MANIFEST` sidecar (the Redis broker boundary) —
-  *             filenames never become paths, so traversal is impossible;
-  *   process → a worker drain reads the job through the distributed
-  *             `binaryFile` source (content bytes never materialize on the
-  *             driver), converts with the mapPartitions kernel, and writes
-  *             `<ledger>/results/<job_id>/` (the result backend boundary)
-  *             carrying the submit index, so results read back in
-  *             submission order like the reference's convert_all
-  *             (service.py:171-186);
+  *             filenames never become paths, so traversal is impossible —
+  *             and the request's conversion options in an `_OPTIONS`
+  *             sidecar ([[FileOptions]]' string form as a JSON object);
+  *   process → [[ConvertKernel.convertOne]] per document in submission
+  *             order, like the reference's convert_all
+  *             (service.py:171-186), written as one JSON-lines file
+  *             `<ledger>/results/<job_id>/results.jsonl` (the result
+  *             backend boundary) by temp name and atomic rename — the
+  *             file is the completion marker, and a write cut short
+  *             leaves the job pending;
   *   status  → read-side state machine, reproducing the reference exactly:
   *             * unknown job_id ⇒ IN_PROGRESS (Celery PENDING means
   *               "unknown", service.py:230-231 — deliberately NOT "fixed"),
@@ -34,6 +37,10 @@ import graft.kernel.ConvertKernel.{ConversionConfig, ConversionResult}
   *               document failed (service.py:247-251); per-document
   *               statuses nested inside,
   *             * task-level exception ⇒ FAILURE with the message.
+  *
+  * No ledger call touches Spark. The `spark` parameters (and `process`'s
+  * `config`) are unused; they stay so the benchmark harness, which
+  * compiles against these signatures, keeps building.
   */
 object JobService {
 
@@ -53,17 +60,41 @@ object JobService {
       status: String,
       error: Option[String])
 
+  private val Json = new ObjectMapper()
+
+  /** One results line; Jackson escapes control characters, so a result
+    * never spans lines. Null fields stay JSON null. */
+  private[jobs] def resultJson(r: ConversionResult): String = {
+    val n = Json.createObjectNode()
+      .put("filename", r.filename).put("markdown", r.markdown).put("error", r.error)
+    val images = n.putArray("images")
+    r.images.foreach(i => images.addObject()
+      .put("type", i.`type`).put("filename", i.filename).put("image", i.image))
+    Json.writeValueAsString(n)
+  }
+
+  private[jobs] def parseResult(line: String): ConversionResult = {
+    val n = Json.readTree(line)
+    def text(node: JsonNode, field: String): String =
+      Option(node.get(field)).filterNot(_.isNull).map(_.asText).orNull
+    ConversionResult(text(n, "filename"), text(n, "markdown"),
+      n.get("images").elements().asScala.map(i =>
+        ImageData(text(i, "type"), text(i, "filename"), text(i, "image"))).toSeq,
+      text(n, "error"))
+  }
+
   final class Ledger(val root: String) {
     private def reqDir(id: String) = Paths.get(root, "requests", id)
     private def resDir(id: String) = Paths.get(root, "results", id)
-    private def failFile(id: String) = Paths.get(root, "results", id, "_TASK_FAILED")
-    private def doneFile(id: String) = Paths.get(root, "results", id, "_DONE")
-    private def batchFlag(id: String) = Paths.get(root, "requests", id, "_BATCH")
-    private def manifestFile(id: String) = Paths.get(root, "requests", id, "_MANIFEST")
+    private def failFile(id: String) = resDir(id).resolve("_TASK_FAILED")
+    private def resultsFile(id: String) = resDir(id).resolve("results.jsonl")
+    private def optionsFile(id: String) = reqDir(id).resolve("_OPTIONS")
+    private def manifestFile(id: String) = reqDir(id).resolve("_MANIFEST")
 
     /** Enqueue: persist payload rows as index-named files plus a filename
-      * manifest; returns the job id. Client filenames go through base64 —
-      * never interpreted as paths (no traversal, no name mangling). */
+      * manifest and the conversion options; returns the job id. Client
+      * filenames go through base64 — never interpreted as paths (no
+      * traversal, no name mangling). */
     def submit(docs: Seq[(String, Array[Byte])], batch: Boolean,
                config: ConversionConfig = ConversionConfig()): String = {
       val id = UUID.randomUUID().toString
@@ -81,7 +112,8 @@ object JobService {
       docs.zipWithIndex.foreach { case ((_, bytes), i) =>
         Files.write(dir.resolve(f"$i%05d.bin"), bytes)
       }
-      if (batch) Files.write(batchFlag(id), Array.emptyByteArray)
+      Files.write(optionsFile(id),
+        Json.writeValueAsBytes(FileOptions(config, batchMode = batch).toOptions.asJava))
       id
     }
 
@@ -91,70 +123,67 @@ object JobService {
         .map(l => new String(Base64.getDecoder.decode(l), StandardCharsets.UTF_8))
         .toIndexedSeq
 
+    private def readOptions(id: String): FileOptions =
+      FileOptions.fromOptions(Json.readValue(Files.readAllBytes(optionsFile(id)),
+        classOf[java.util.Map[String, String]]).asScala.toMap)
+
     def pendingJobs(): Seq[String] = {
       val req = Paths.get(root, "requests")
       if (!Files.isDirectory(req)) return Seq.empty
       Files.list(req).iterator().asScala.map(_.getFileName.toString)
-        .filterNot(id => Files.exists(doneFile(id)) || Files.exists(failFile(id)))
+        .filterNot(id => Files.exists(resultsFile(id)) || Files.exists(failFile(id)))
         .toSeq.sorted
     }
 
-    def isBatch(id: String): Boolean = Files.exists(batchFlag(id))
+    def isBatch(id: String): Boolean =
+      Files.exists(optionsFile(id)) && readOptions(id).batchMode
 
-    /** Worker drain: convert one pending job through the Spark kernel.
-      * Content bytes flow source→executors only (binaryFile scan); the
-      * driver touches just the manifest. The submit index rides along so
-      * results are order-preserving. */
+    /** Worker drain: convert one pending job in this thread with the
+      * options stored at submit; `spark` and `config` are unused. Never
+      * throws: an exception is a task failure, except that an interrupt
+      * (server stop) records nothing, so the job stays pending. */
     def process(spark: SparkSession, id: String,
-                config: ConversionConfig = ConversionConfig()): Unit = {
-      import spark.implicits._
+                config: ConversionConfig = ConversionConfig()): Unit =
       try {
         val dir = reqDir(id)
         if (!Files.isDirectory(dir))
           throw new IllegalStateException(s"no such job: $id")
+        val options = readOptions(id)
         val names = readManifest(id)
-        val bnames = spark.sparkContext.broadcast(names)
-        val batch = isBatch(id)
-        val parallelism = math.max(1, math.min(names.size, spark.sparkContext.defaultParallelism))
-        val files = spark.read.format("binaryFile")
-          .option("pathGlobFilter", "*.bin")
-          .load(dir.toString)
-          .select($"path", $"content")
-          .as[(String, Array[Byte])]
-          .repartition(parallelism) // small files pack into one scan partition otherwise
-        val results = files.mapPartitions { it =>
-          val nm = bnames.value
-          it.map { case (path, content) =>
-            val idx = path.substring(path.lastIndexOf('/') + 1).stripSuffix(".bin").toInt
-            (idx, ConvertKernel.convertOne(nm(idx), content, config, batchMode = batch))
-          }
-        }.toDF("idx", "r").select($"idx", $"r.*")
         Files.createDirectories(resDir(id))
-        results.write.mode("overwrite")
-          .json(resDir(id).resolve("rows").toString)
-        Files.write(doneFile(id), Array.emptyByteArray)
+        // a temp name of its own, so two servers draining one ledger
+        // never write into each other's file
+        val tmp = Files.createTempFile(resDir(id), "results.jsonl.", ".tmp")
+        val out = Files.newBufferedWriter(tmp, StandardCharsets.UTF_8)
+        try names.zipWithIndex.foreach { case (name, i) =>
+          val bytes = Files.readAllBytes(dir.resolve(f"$i%05d.bin"))
+          out.write(resultJson(ConvertKernel.convertOne(
+            name, bytes, options.config, batchMode = options.batchMode)))
+          out.write('\n')
+        } finally out.close()
+        Files.move(tmp, resultsFile(id), StandardCopyOption.ATOMIC_MOVE)
       } catch {
+        case _: Exception if Thread.currentThread().isInterrupted => ()
         case e: Exception =>
           Files.createDirectories(resDir(id))
           Files.write(failFile(id), e.toString.getBytes("UTF-8"),
             StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
       }
-    }
 
-    def processAllPending(spark: SparkSession,
-                          config: ConversionConfig = ConversionConfig()): Unit =
-      pendingJobs().foreach(process(spark, _, config))
+    /** Convert every pending job, in id order; `spark` is unused. */
+    def processAllPending(spark: SparkSession): Unit =
+      pendingJobs().foreach(process(spark, _))
 
     /** Retention sweep (VERDICT r12 #8): the reference's Celery result
       * backend expires results after a TTL (`result_expires`, 24 h
       * default); without an analog this filesystem ledger grows without
       * bound in a long-lived server. Deletes the request AND result
-      * dirs of COMPLETED jobs (done or task-failed) whose completion
-      * marker is older than `ttlMillis`; in-progress jobs are never
-      * touched, however old — only completion starts the clock, exactly
-      * like Celery's backend. After expiry a status lookup naturally
-      * falls back to the unknown-id ⇒ IN_PROGRESS quirk — the same
-      * answer the reference gives once Celery forgets a task id
+      * dirs of COMPLETED jobs (results or task-failure file present) whose
+      * completion file is older than `ttlMillis`; in-progress jobs are
+      * never touched, however old — only completion starts the clock,
+      * exactly like Celery's backend. After expiry a status lookup
+      * naturally falls back to the unknown-id ⇒ IN_PROGRESS quirk — the
+      * same answer the reference gives once Celery forgets a task id
       * (service.py:230-231), spec-pinned. Returns the swept job ids
       * (sorted) so a caller can log them. `now` is injectable for
       * deterministic tests. */
@@ -168,7 +197,7 @@ object JobService {
         finally st.close()
       }
       val expired = ids.filter { id =>
-        Seq(doneFile(id), failFile(id)).find(Files.exists(_)).exists(m =>
+        Seq(resultsFile(id), failFile(id)).find(Files.exists(_)).exists(m =>
           now - Files.getLastModifiedTime(m).toMillis >= ttlMillis)
       }.sorted
       expired.foreach { id =>
@@ -186,26 +215,20 @@ object JobService {
         finally st.close()
       }
 
-    /** Results in submission order (reference convert_all returns input
-      * order; the idx column restores it after the distributed write). */
-    private def readResults(spark: SparkSession, id: String): Seq[ConversionResult] = {
-      import spark.implicits._
-      spark.read
-        .schema("idx INT, filename STRING, markdown STRING, " +
-          "images ARRAY<STRUCT<type: STRING, filename: STRING, image: STRING>>, error STRING")
-        .json(resDir(id).resolve("rows").toString)
-        .orderBy($"idx")
-        .drop("idx")
-        .as[ConversionResult].collect().toSeq
-    }
+    /** Results in submission order, one line per submitted document. */
+    private def readResults(id: String): Seq[ConversionResult] =
+      Files.readAllLines(resultsFile(id), StandardCharsets.UTF_8).asScala.map(parseResult).toSeq
+
+    private def taskError(id: String): String =
+      new String(Files.readAllBytes(failFile(id)), StandardCharsets.UTF_8)
 
     /** Single-job status (service.py:220-242). `head` is deterministic:
-      * the first-submitted document. */
+      * the first-submitted document. `spark` is unused. */
     def singleStatus(spark: SparkSession, id: String): JobResult = {
       if (Files.exists(failFile(id)))
-        JobResult(id, None, Some(new String(Files.readAllBytes(failFile(id)), "UTF-8")), Failure)
-      else if (Files.exists(doneFile(id))) {
-        readResults(spark, id).headOption match {
+        JobResult(id, None, Some(taskError(id)), Failure)
+      else if (Files.exists(resultsFile(id))) {
+        readResults(id).headOption match {
           case None =>
             JobResult(id, None, Some("job produced no results"), Failure)
           case Some(r) if r.error != null =>
@@ -216,13 +239,12 @@ object JobService {
     }
 
     /** Batch-job status (service.py:244-273), per-document results in
-      * submission order. */
+      * submission order. `spark` is unused. */
     def batchStatus(spark: SparkSession, id: String): BatchJobResult = {
       if (Files.exists(failFile(id)))
-        BatchJobResult(id, Seq.empty,
-          Failure, Some(new String(Files.readAllBytes(failFile(id)), "UTF-8")))
-      else if (Files.exists(doneFile(id))) {
-        val per = readResults(spark, id).map { r =>
+        BatchJobResult(id, Seq.empty, Failure, Some(taskError(id)))
+      else if (Files.exists(resultsFile(id))) {
+        val per = readResults(id).map { r =>
           if (r.error != null) JobResult(id, None, Some(r.error), Failure)
           else JobResult(id, Some(r), None, Success)
         }

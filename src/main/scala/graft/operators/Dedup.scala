@@ -278,17 +278,16 @@ object Dedup {
     // plabel) row k ways, and the equi-join matches exactly one replica
     // per probe row — provably the same rows as the unsalted join. Cost
     // is (k-1)·n extra node-sized build rows per round, so k is capped
-    // (conf graft.cc.salt overrides) and tied to the loop's own
-    // data-derived partition count — at sf0.1 parts is 1-2 and the salt
-    // degenerates to a no-op column, at 100 TB it splits the hot label
-    // across up to 8 reducers. The NEIGHBOR-MIN join is left unsalted
+    // and tied to the loop's own data-derived partition count — at
+    // sf0.1 parts is 1-2 and the salt degenerates to a no-op column,
+    // at 100 TB it splits the hot label across up to 8 reducers. The
+    // NEIGHBOR-MIN join is left unsalted
     // deliberately: its probe is the STATIONARY edge layout (partitioned
     // by b_id once, reused every round — salting would re-shuffle the
     // edges per round), and its downstream min() partial-aggregates
     // map-side, so a hub key costs layout imbalance, not reducer
     // explosion; SCALING.md carries the 100 TB story.
-    val saltK = s.conf.getOption("graft.cc.salt").map(_.toInt)
-      .getOrElse(math.min(parts, 8))
+    val saltK = math.min(parts, 8)
     // One propagation round over `cur`: neighbor-min, propagate, salted
     // pointer jump. `propagated` is LAZILY checkpointed (r19): the jump
     // self-join's two branches shuffle it by DIFFERENT keys ((label,
@@ -1362,23 +1361,8 @@ object Dedup {
     // BandedSemanticDedupSpec (94–98% / 96–98% at fixture scales).
     QuerySpec(
       "d24_banded_semdedup",
-      (s, dir) => {
-        // dev-only scale knobs (SCALING.md runs): -Dgraft.d24.auto
-        // sizes (bands, r) from the corpus count;
-        // -Dgraft.d24.threshold probes the 0.9 production operating
-        // point where banding's reduction is steep. JVM properties,
-        // not env vars, so a lingering shell export can never bend an
-        // oracle-verified run (ADVICE r12). The driver sets neither —
-        // the oracle pins (0.4, 10, 3), which IS the auto shape at the
-        // driver SF.
-        val th = sys.props.get("graft.d24.threshold")
-          .map(_.toDouble).getOrElse(0.4)
-        val pairs =
-          if (sys.props.get("graft.d24.auto").exists(_.nonEmpty))
-            bandedCosinePairsAuto(s, dir, th)._1
-          else bandedCosinePairs(s, dir, th, 10, 3)
-        semdedupKeeper(s, dir, pairs.select(col("a_id"), col("b_id")))
-      },
+      (s, dir) => semdedupKeeper(s, dir,
+        bandedCosinePairs(s, dir, 0.4, 10, 3).select(col("a_id"), col("b_id"))),
       Some("WITH RECURSIVE "
         + BandedCosinePairsOracle(0.4, 10, 3).trim.stripPrefix("WITH")
         + SemdedupKeeperSqlTail)),
@@ -1989,15 +1973,7 @@ object Dedup {
     * The batch signature frame is BROADCAST into the bucket join, so the
     * standing index is scanned but never shuffled — at 100 TB the only
     * exchange is candidate-sized. DedupStressSpec pins this frame
-    * row-identical to [[incrementalSemdedupInline]].
-    *
-    * Dev-only scale knob (SCALING.md): JVM property
-    * `graft.d25.batchLimit` caps the batch at vec_id < limit, so the
-    * probe can be timed with a FIXED batch against a 10× corpus (cost
-    * must follow the batch, not the corpus). A SYSTEM PROPERTY, not an
-    * env var (ADVICE r12): properties only exist when a harness passes
-    * -D explicitly, so a knob lingering in a shell environment can
-    * never silently shrink an oracle-verified or benched run. */
+    * row-identical to [[incrementalSemdedupInline]]. */
   private[graft] def semanticProbe(s: org.apache.spark.sql.SparkSession,
                                    dir: String, indexRoot: String)
       : org.apache.spark.sql.DataFrame = {
@@ -2014,9 +1990,7 @@ object Dedup {
       new java.io.File(indexRoot, "signatures").getAbsolutePath)
       .select($"band".cast("long").as("band"), $"sg", $"corpus_id")
     val emb = Tables(s, dir, "embeddings").select($"vec_id", $"embedding")
-    val batch = sys.props.get("graft.d25.batchLimit").map(_.toLong)
-      .foldLeft(emb.filter($"vec_id" % 5 === 0))((b, lim) =>
-        b.filter($"vec_id" < lim))
+    val batch = emb.filter($"vec_id" % 5 === 0)
     val bSig = bandSignaturesOn(batch, anchors, r)
       .select($"band", $"sg", $"vec_id".as("new_id"))
     val cand = cSig.join(broadcast(bSig), Seq("band", "sg"))
@@ -2122,23 +2096,7 @@ object Dedup {
   private[graft] def incrementalClusters(
       s: org.apache.spark.sql.SparkSession, dir: String)
       : org.apache.spark.sql.DataFrame =
-    incrementalClustersAt(s, dir, d28DevShape.getOrElse(D25Shape))
-
-  /** Dev-only shape override for d28's standing index (SCALING r13):
-    * JVM property `graft.d28.shape=BANDS,R` re-stages index + labels at
-    * that banding shape and runs the identical maintenance step there —
-    * how the sf1/sf10 probes measure the [[autoShape]] operating point
-    * the fixed pinned (10, 3) cannot reach (bucket occupancy grows ∝ n
-    * at a fixed shape; autoShape holds it at ~[[MaxCosineBlock]]/8). A
-    * SYSTEM PROPERTY, not an env var (the d25.batchLimit rationale):
-    * the roster oracle is generated at the PINNED shape, so a knob that
-    * could linger in a shell must not exist unless a harness passes -D
-    * explicitly — set during a verify run, the d28 row goes loudly red
-    * rather than silently measuring the wrong thing. */
-  private def d28DevShape: Option[(Int, Int)] =
-    sys.props.get("graft.d28.shape").map { v =>
-      val Array(b, r) = v.split(","); (b.trim.toInt, r.trim.toInt)
-    }
+    incrementalClustersAt(s, dir, D25Shape)
 
   /** [[incrementalClusters]] at an explicit index shape — the
     * maintenance math is shape-generic (the shape is a STAGING-time

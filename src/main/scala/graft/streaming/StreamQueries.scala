@@ -36,17 +36,8 @@ object StreamQueries {
     val root = new java.io.File(sys.props.getOrElse("graft.fixture.dir",
       sys.props("user.dir") + "/data"))
     val base = new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9._-]", "_")
-    // Dev-only cadence knob (SCALING r13, VERDICT r12 #7): -Dgraft.
-    // inbox.files re-stages the inbox at a finer slicing so trigger
-    // cadence can be measured (8 files / 4-per-trigger = 2 giant data
-    // batches; 32 files = 8 batches each ~1/8 of the span). A JVM
-    // property, never env; non-default counts stage to their OWN dir so
-    // the roster artifact is never clobbered. Results are cadence-
-    // invariant (the finalization oracles depend only on the final
-    // watermark); only wall/state telemetry changes.
-    val nFiles = sys.props.get("graft.inbox.files").map(_.toInt).getOrElse(8)
-    val path = new java.io.File(root, "events_inbox_" + base +
-      (if (nFiles == 8) "" else s"_f$nFiles"))
+    val nFiles = 8
+    val path = new java.io.File(root, "events_inbox_" + base)
     // same once-per-process fast path as Multimodal.mediaTable: after the
     // first verification the measured st* calls skip the count() job
     if (verifiedInboxes.contains(path.getAbsolutePath))

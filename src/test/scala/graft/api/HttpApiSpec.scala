@@ -275,6 +275,34 @@ class HttpApiSpec extends SparkTestBase {
     assert(body.contains(""""markdown":"# OK""""), body)
   }
 
+  test("jobs accepted before a restart are converted when the next server starts") {
+    val root = java.nio.file.Files.createTempDirectory("graft_api_restart").toString
+    // accepted by an earlier server that never processed it
+    val id = new graft.jobs.JobService.Ledger(root).submit(
+      Seq(("photo.png", graft.kernel.ImageRenderer.renderPicture(1))), batch = true,
+      graft.kernel.ConvertKernel.ConversionConfig(imageResolutionScale = 2))
+    val restarted = new HttpApi.Server(spark, 0, root).start()
+    try {
+      var body = ""
+      var status = "IN_PROGRESS"
+      val deadline = System.currentTimeMillis() + 30000
+      while (status == "IN_PROGRESS" && System.currentTimeMillis() < deadline) {
+        Thread.sleep(100)
+        body = client.send(HttpRequest.newBuilder(URI.create(
+          s"http://127.0.0.1:${restarted.boundPort}/batch-conversion-jobs/$id")).GET().build(),
+          HttpResponse.BodyHandlers.ofString()).body()
+        // the job's own status is the last one in the body
+        status = """"status":"([A-Z_]+)"""".r.findAllMatchIn(body).toSeq.last.group(1)
+      }
+      assert(status == "SUCCESS", body)
+      val png = """"image":"([^"]+)"""".r.findFirstMatchIn(body).get.group(1)
+      val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(
+        java.util.Base64.getDecoder.decode(png)))
+      assert((img.getWidth, img.getHeight) == ((graft.kernel.ImageRenderer.PictureBaseW * 2,
+        graft.kernel.ImageRenderer.PictureBaseH * 2)), body)
+    } finally restarted.stop()
+  }
+
   test("health probes") {
     assert(get("/health").body() == """{"status":"ok"}""")
     val ready = get("/health/ready")

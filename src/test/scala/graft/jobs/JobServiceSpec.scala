@@ -1,12 +1,20 @@
 package graft.jobs
 
+import java.io.ByteArrayInputStream
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
+import java.util.{Base64, UUID}
+import java.util.concurrent.ConcurrentLinkedQueue
+import javax.imageio.ImageIO
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+
 import graft.SparkTestBase
 import graft.jobs.JobService._
+import graft.kernel.{ConvertKernel, ImageRenderer}
+import graft.kernel.ConvertKernel.ConversionConfig
 
 /** O18-O21 state machine (reference service.py:204-273 + worker/tasks.py),
   * previously implemented-but-unverified (VERDICT r1 top gap).
@@ -17,6 +25,11 @@ class JobServiceSpec extends SparkTestBase {
     new Ledger(Files.createTempDirectory("graft-jobs").toString)
 
   private def b(s: String): Array[Byte] = s.getBytes(StandardCharsets.UTF_8)
+
+  private def pngDims(base64Png: String): (Int, Int) = {
+    val img = ImageIO.read(new ByteArrayInputStream(Base64.getDecoder.decode(base64Png)))
+    (img.getWidth, img.getHeight)
+  }
 
   test("submit returns a job id that reports IN_PROGRESS before processing (O18)") {
     val ledger = newLedger()
@@ -160,5 +173,100 @@ class JobServiceSpec extends SparkTestBase {
     val later = System.currentTimeMillis() + 60L * 60 * 1000
     assert(ledger.sweepExpired(60L * 1000, later) == Seq(id))
     assert(ledger.singleStatus(spark, id).status == InProgress)
+  }
+
+  test("a job converts with the options it was submitted with, whatever process is given") {
+    val ledger = newLedger()
+    val cfg = ConversionConfig(extractTablesAsImages = true, imageResolutionScale = 1)
+    val docs = Seq(("photo.png", ImageRenderer.renderPicture(1)), ("t.csv", b("h1,h2\n1,2\n")))
+    val id = ledger.submit(docs, batch = true, cfg)
+    assert(ledger.isBatch(id))
+    ledger.process(spark, id) // default config: scale 4, no table images
+    val rs = ledger.batchStatus(spark, id).conversionResults
+    assert(rs.map(_.status) == Seq(Success, Success))
+    // the picture decodes at native × 1, not × 4
+    assert(pngDims(rs.head.result.get.images.head.image) ==
+      ((ImageRenderer.PictureBaseW, ImageRenderer.PictureBaseH)))
+    // and the table comes back as an image, as the submit asked
+    assert(rs(1).result.get.images.nonEmpty)
+    assert(rs(1).result == Some(ConvertKernel.convertOne("t.csv", docs(1)._2, cfg, batchMode = true)))
+  }
+
+  test("submit, process and status run no Spark job") {
+    val group = "ledger-" + UUID.randomUUID()
+    val seen = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
+          seen.add(String.valueOf(e.properties.getProperty("spark.job.description")))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "ledger")
+      val ledger = newLedger()
+      val id = ledger.submit(Seq(("a.md", b("# A")), ("b.csv", b("x,y\n1,2\n"))), batch = true)
+      ledger.process(spark, id)
+      assert(ledger.batchStatus(spark, id).status == Success)
+      // a marker job of our own closes the window: the listener bus
+      // delivers one queue's events in order, so once the marker is seen
+      // every job the ledger started has been seen too
+      sc.setJobDescription("marker")
+      spark.range(1).count()
+      val deadline = System.currentTimeMillis() + 30000
+      while (!seen.contains("marker") && System.currentTimeMillis() < deadline) Thread.sleep(20)
+      assert(seen.contains("marker"))
+      assert(seen.asScala.count(_ != "marker") == 0, seen)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("ledger results equal convertOne field for field, in submission order") {
+    val ledger = newLedger()
+    val docs = Seq(
+      ("notes \"q\" é.md", b("# Café \"quoted\"\n\nSecond line — ünïcödé ✓")),
+      ("table.csv", b("h1,h2\n1,2\n")),
+      ("broken.pdf", b("%PDF-fake")),
+      ("photo.png", ImageRenderer.renderPicture(1)))
+    val cfg = ConversionConfig(imageResolutionScale = 2)
+    val want = docs.map { case (n, bytes) => ConvertKernel.convertOne(n, bytes, cfg, batchMode = true) }
+    assert(want.map(_.error != null) == Seq(false, false, true, false))
+    // the results line keeps every field, nulls included
+    want.foreach(r => assert(parseResult(resultJson(r)) == r))
+    val id = ledger.submit(docs, batch = true, cfg)
+    ledger.process(spark, id)
+    assert(ledger.batchStatus(spark, id) == BatchJobResult(id, want.map { r =>
+      if (r.error != null) JobResult(id, None, Some(r.error), Failure)
+      else JobResult(id, Some(r), None, Success)
+    }, Success, None))
+  }
+
+  test("a stray temp results file from a cut-short write leaves the job pending") {
+    val ledger = newLedger()
+    val id = ledger.submit(Seq(("a.md", b("# A"))), batch = false)
+    val res = Paths.get(ledger.root, "results", id)
+    Files.createDirectories(res)
+    Files.write(res.resolve("results.jsonl.tmp"), b("""{"filename":"a","mark"""))
+    assert(ledger.singleStatus(spark, id).status == InProgress)
+    assert(ledger.pendingJobs() == Seq(id))
+    ledger.process(spark, id)
+    val s = ledger.singleStatus(spark, id)
+    assert(s.status == Success)
+    assert(s.result.map(_.markdown) == Some("# A"))
+    assert(ledger.pendingJobs().isEmpty)
+  }
+
+  test("two workers converting one job at once both leave it SUCCESS") {
+    // two servers started on one ledger root both drain its pending jobs
+    val ledger = newLedger()
+    val id = ledger.submit(Seq.tabulate(50)(i => (s"d$i.md", b(s"# D$i"))), batch = true)
+    val workers = Seq.fill(2)(new Thread(() => ledger.process(spark, id)))
+    workers.foreach(_.start())
+    workers.foreach(_.join())
+    val s = ledger.batchStatus(spark, id)
+    assert(s.status == Success, s.error)
+    assert(s.conversionResults.flatMap(_.result).map(_.markdown) == (0 until 50).map(i => s"# D$i"))
   }
 }
