@@ -135,15 +135,30 @@ object HttpApi {
 
   // ----------------------------------------------------------------- JSON
 
-  private def esc(s: String): String = s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
+  /** `s` as the body of a JSON string: `"`, `\\`, `\n`, `\r` and `\t`
+    * get their short escapes, other control chars `\u00XX`; everything
+    * else, non-ASCII too, is copied. Returns `s` itself when nothing needs
+    * escaping (base64 payloads never do). */
+  private[api] def esc(s: String): String = {
+    var i = 0
+    while (i < s.length && s.charAt(i) >= ' ' && s.charAt(i) != '"' && s.charAt(i) != '\\') i += 1
+    if (i == s.length) return s
+    val out = new java.lang.StringBuilder(s.length + 16).append(s, 0, i)
+    while (i < s.length) {
+      s.charAt(i) match {
+        case '"' => out.append("\\\"")
+        case '\\' => out.append("\\\\")
+        case '\n' => out.append("\\n")
+        case '\r' => out.append("\\r")
+        case '\t' => out.append("\\t")
+        case c if c < ' ' => out.append("\\u00").append(Hex(c >> 4)).append(Hex(c & 0xF))
+        case c => out.append(c)
+      }
+      i += 1
+    }
+    out.toString
   }
+  private val Hex = "0123456789abcdef"
 
   private def jStr(s: String): String = "\"" + esc(s) + "\""
 
@@ -246,6 +261,9 @@ object HttpApi {
     * 413, in multiples of the endpoint's payload budget. */
   private val LingerBudgets = 4
 
+  /** How often the worker thread sweeps expired jobs. */
+  private val SweepEveryMillis: Long = 60L * 60 * 1000
+
   /** A running API server bound to `port` (0 = ephemeral; read the actual
     * one from `boundPort`). `ledgerRoot` hosts the async jobs ledger. */
   final class Server(spark: SparkSession, port: Int, ledgerRoot: String,
@@ -278,10 +296,26 @@ object HttpApi {
 
     def boundPort: Int = http.getAddress.getPort
 
+    /** When the worker thread next sweeps expired jobs (epoch ms); only
+      * that thread touches it. */
+    private var nextSweep = 0L
+
+    /** Deletes jobs completed more than [[JobService.ResultExpiresMillis]]
+      * ago, at most once an hour, so a long-lived server's ledger stays
+      * bounded. Runs on the worker thread only, after a job, so it never
+      * races a conversion. */
+    private def sweepIfDue(): Unit = {
+      val now = System.currentTimeMillis()
+      if (now >= nextSweep) {
+        nextSweep = now + SweepEveryMillis
+        ledger.sweepExpired(JobService.ResultExpiresMillis, now)
+      }
+    }
+
     def start(): this.type = {
       // jobs a previous server accepted but never finished; submits made
       // from here on queue behind this drain on the one worker thread
-      workers.execute(() => ledger.processAllPending(spark))
+      workers.execute { () => ledger.processAllPending(spark); sweepIfDue() }
       http.setExecutor(pool)
       http.createContext("/", handler)
       http.start()
@@ -489,7 +523,7 @@ object HttpApi {
           validated(ex, batch).foreach { docs =>
             val id = ledger.submit(docs, batch, config)
             // the Celery-worker analog: convert off the request thread
-            workers.execute(() => ledger.process(spark, id))
+            workers.execute { () => ledger.process(spark, id); sweepIfDue() }
             val json =
               if (batch)
                 batchJobResultJson(JobService.BatchJobResult(id, Seq.empty, JobService.InProgress, None))

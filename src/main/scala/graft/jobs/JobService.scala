@@ -48,6 +48,10 @@ object JobService {
   val Success = "SUCCESS"
   val Failure = "FAILURE"
 
+  /** How long a completed job's results are kept: Celery's
+    * `result_expires` default, 24 h (see [[Ledger.sweepExpired]]). */
+  val ResultExpiresMillis: Long = 24L * 60 * 60 * 1000
+
   final case class JobResult(
       jobId: String,
       result: Option[ConversionResult],

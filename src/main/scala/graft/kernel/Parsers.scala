@@ -171,23 +171,117 @@ object Parsers {
     }
   }
 
-  /** HTML → markdown-able tree: stack-free single-pass tag walk with regex
-    * tokenization (the reference's own sniff is regex-based; a full DOM is
-    * out of scope). Handles h1..h6, p, table/tr/th/td, img, li; scripts and
-    * styles are dropped. */
+  /** HTML → markdown-able tree: stack-free single-pass tag walk over a
+    * tag/text tokenization (the reference's own sniff is regex-based; a
+    * full DOM is out of scope). Handles h1..h6, p, table/tr/th/td, img,
+    * li; comments, scripts and styles are dropped. Stripping and
+    * tokenizing are linear scans, so unclosed openers cost linear time. */
   object HtmlParser extends FormatParser {
-    private val TagOrText = "(?s)<[^>]*>|[^<]+".r
-    private val Comment = "(?s)<!--.*?-->".r
-    private val ScriptOrStyle = "(?is)<(script|style)[^>]*>.*?</\\1>".r
     private val Href = "(?i)href\\s*=\\s*[\"']([^\"']*)[\"']".r
     private val Colspan = spanAttr("colspan")
     private val Rowspan = spanAttr("rowspan")
     private def spanAttr(attr: String) = s"""(?i)$attr\\s*=\\s*["']?(\\d+)""".r
 
+    /** The first match at or after a position, for positions asked in
+      * non-decreasing order: a cached answer stands until the position
+      * passes it, so all the asks together scan `find`'s input about
+      * once, where a regex re-scans to the end of input from every
+      * unclosed opener. */
+    private final class NextMatch(find: Int => Int) {
+      private var from0 = Int.MaxValue
+      private var at = -1
+      def apply(from: Int): Int = {
+        if (from < from0 || (at >= 0 && at < from)) { at = find(from); from0 = from }
+        at
+      }
+    }
+
+    private def asciiLower(c: Char): Char = if (c >= 'A' && c <= 'Z') (c + 32).toChar else c
+
+    /** `word` (lower case) at `at` in `s`, ASCII case-insensitively. */
+    private def wordAt(s: String, at: Int, word: String): Boolean =
+      at + word.length <= s.length && {
+        var j = 0
+        while (j < word.length && asciiLower(s.charAt(at + j)) == word.charAt(j)) j += 1
+        j == word.length
+      }
+
+    /** `raw` with what `(?s)<!--.*?-->` and then
+      * `(?is)<(script|style)[^>]*>.*?</\1>` match replaced by "", in linear
+      * time and with the same choices: a comment runs to the first `-->`
+      * after its `<!--`; a script/style element runs from `<script` or
+      * `<style` (any ASCII case), through the first `>` after the name,
+      * to the first `</script>`/`</style>` (any ASCII case) after that
+      * `>`. An opener with no closer is left in place, and a later opener
+      * of the other element can still match. */
+    private[kernel] def stripHidden(raw: String): String = {
+      val s = {
+        val out = new java.lang.StringBuilder(raw.length)
+        var pos = 0
+        var open = raw.indexOf("<!--")
+        while (open >= 0) {
+          val close = raw.indexOf("-->", open + 4)
+          if (close < 0) open = -1
+          else {
+            out.append(raw, pos, open)
+            pos = close + 3
+            open = raw.indexOf("<!--", pos)
+          }
+        }
+        out.append(raw, pos, raw.length).toString
+      }
+      val gt = new NextMatch(s.indexOf('>', _))
+      def closerOf(name: String) = new NextMatch({ from =>
+        var c = s.indexOf("</", from)
+        while (c >= 0 && !(wordAt(s, c + 2, name) && c + 2 + name.length < s.length &&
+            s.charAt(c + 2 + name.length) == '>'))
+          c = s.indexOf("</", c + 1)
+        c
+      })
+      val closers = Map("script" -> closerOf("script"), "style" -> closerOf("style"))
+      val out = new java.lang.StringBuilder(s.length)
+      var pos = 0
+      var i = s.indexOf('<')
+      while (i >= 0) {
+        val name = if (wordAt(s, i + 1, "script")) "script" else if (wordAt(s, i + 1, "style")) "style" else null
+        val end = if (name == null) -1 else {
+          val g = gt(i + 1 + name.length)
+          val c = if (g < 0) -1 else closers(name)(g + 1)
+          if (c < 0) -1 else c + name.length + 3
+        }
+        if (end < 0) i = s.indexOf('<', i + 1)
+        else {
+          out.append(s, pos, i)
+          pos = end
+          i = s.indexOf('<', end)
+        }
+      }
+      out.append(s, pos, s.length).toString
+    }
+
+    /** The tokens `(?s)<[^>]*>|[^<]+` finds left to right, in linear
+      * time: a tag runs from `<` to the first `>` after it, text runs to
+      * the next `<`, and a `<` with no `>` after it is dropped, as that
+      * regex skips it. */
+    private[kernel] def tagsAndText(s: String): Iterator[String] = new Iterator[String] {
+      private val gt = new NextMatch(s.indexOf('>', _))
+      private var i = 0
+      private def skipUnclosed(): Unit =
+        while (i < s.length && s.charAt(i) == '<' && gt(i + 1) < 0) i += 1
+      def hasNext: Boolean = { skipUnclosed(); i < s.length }
+      def next(): String = {
+        if (!hasNext) throw new NoSuchElementException("no more HTML tokens")
+        val end =
+          if (s.charAt(i) == '<') gt(i + 1) + 1
+          else { val lt = s.indexOf('<', i); if (lt < 0) s.length else lt }
+        val tok = s.substring(i, end)
+        i = end
+        tok
+      }
+    }
+
     def parse(name: String, bytes: Array[Byte]): Either[String, DocTree] = {
-      val raw = text(bytes)
-      val noComments = Comment.replaceAllIn(raw, "")
-      val noScripts = ScriptOrStyle.replaceAllIn(noComments, "")
+      val noScripts = stripHidden(text(bytes))
 
       val items = ArrayBuffer[Element]()
       var headingLevel = 0
@@ -258,7 +352,7 @@ object Parsers {
         tableRows = ArrayBuffer(); inTable = false
       }
 
-      TagOrText.findAllIn(noScripts).foreach { tok =>
+      tagsAndText(noScripts).foreach { tok =>
         if (tok.startsWith("<")) {
           val tag = tok.stripPrefix("<").stripPrefix("/").takeWhile(c => c.isLetterOrDigit).toLowerCase
           val isClose = tok.startsWith("</")

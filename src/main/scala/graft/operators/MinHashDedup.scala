@@ -4,7 +4,9 @@ import scala.util.hashing.MurmurHash3
 
 import graft.{QuerySpec, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** MinHash + LSH near-duplicate detection: shingle → seeded MinHash
   * signatures → band-bucket self-join → exact Jaccard rerank on the true
@@ -27,9 +29,9 @@ import org.apache.spark.sql.functions._
 object MinHashDedup {
 
   val NumBands = 8
-  private val P = 2147483647L // 2^31 - 1, prime
+  private[operators] val P = 2147483647L // 2^31 - 1, prime
   // fixed-seed affine coefficients: a in [1, p-1], b in [0, p-1]
-  private val (coefA, coefB) = {
+  private[operators] val (coefA, coefB) = {
     val rng = new java.util.Random(42L)
     val a = Array.fill(NumBands)(1 + math.floorMod(rng.nextLong(), P - 1))
     val b = Array.fill(NumBands)(math.floorMod(rng.nextLong(), P))
@@ -286,26 +288,28 @@ object MinHashDedup {
     * shingles are what make Jaccard discriminative. */
   def minhashPairs(s: SparkSession, dir: String, threshold: Double): DataFrame =
     minhashPairsOn(s, Tables(s, dir, "documents"), threshold)
+      .orderBy(col("jaccard_dist"), col("a_id"), col("b_id"))
 
   /** The LSH index tables for a `(doc_id, text)` frame: band rows
     * `(doc_id, band, hv)` and fingerprint rows `(doc_id, hs)` (sorted
     * xxhash64 shingle arrays). At 100 TB these are the tables a pipeline
     * persists as its standing dedup index — computed once per corpus,
-    * probed by every incremental batch (d12). Both returned frames are
-    * eagerly materialized (localCheckpoint) so candidate generation and
-    * the rerank reuse them without recompute AND without cache-manager
-    * entries; the shingle-set intermediate is unpersisted before this
-    * returns, so nothing cached outlives the call. */
+    * probed by every incremental batch (d12). One typed map per document
+    * builds its distinct shingle set once and derives both the band
+    * minima and the fingerprints from it; that `(doc_id, mins, hs)`
+    * frame is eagerly materialized (localCheckpoint, one job) and both
+    * returned frames are projections of it, so candidate generation and
+    * the rerank reuse it without recompute and without cache-manager
+    * entries. Documents with no shingle (< 3 tokens, null text) drop. */
   def lshIndex(s: SparkSession, rawDocs: DataFrame): (DataFrame, DataFrame) = {
     import s.implicits._
-    // Shared typed-flatMap shingling (see Shingles); <3-token docs drop.
-    val docs = Shingles.sets(s, rawDocs)
-      .persist() // reused: signature build + the fingerprint projection
-
-    val bands = docs.as[(Long, Seq[String])]
-      .flatMap { case (id, toks) =>
+    val index = rawDocs.select($"doc_id", $"text").as[(Long, String)]
+      .map { case (id, text) =>
+        val set = Shingles.shingleSet(text, 3)
         val mins = Array.fill(NumBands)(Long.MaxValue)
-        toks.foreach { t =>
+        val hs = new Array[Long](set.size)
+        var j = 0
+        set.forEach { t =>
           val x = MurmurHash3.stringHash(t, 0x9747b28c).toLong & 0x7FFFFFFFL
           var i = 0
           while (i < NumBands) {
@@ -313,17 +317,18 @@ object MinHashDedup {
             if (h < mins(i)) mins(i) = h
             i += 1
           }
+          // Spark's xxhash64(t): XXH64, seed 42, over the UTF-8 bytes
+          hs(j) = XXH64.hashUTF8String(UTF8String.fromString(t), 42L)
+          j += 1
         }
-        Iterator.range(0, NumBands).map(i => (id, i, mins(i)))
+        java.util.Arrays.sort(hs)
+        (id, mins, hs)
       }
-      .toDF("doc_id", "band", "hv")
-      .localCheckpoint(true) // self-joined x/y in candidate gen
-
-    val fingerprints = docs.select($"doc_id",
-      array_sort(expr("transform(toks, t -> xxhash64(t))")).as("hs"))
-      .localCheckpoint(true) // rerank reads it twice (ta and tb sides)
-    docs.unpersist(false)
-    (bands, fingerprints)
+      .filter(_._3.nonEmpty)
+      .toDF("doc_id", "mins", "hs")
+      .localCheckpoint(true) // bands are self-joined, fingerprints read twice
+    val bands = index.select($"doc_id", posexplode($"mins").as(Seq("band", "hv")))
+    (bands, index.select($"doc_id", $"hs"))
   }
 
   /** Exact-Jaccard rerank of candidate `(a_id, b_id)` pairs over the
@@ -340,8 +345,10 @@ object MinHashDedup {
       .select(col("a_id"), col("b_id"), col("jaccard_dist"))
   }
 
-  /** [[minhashPairs]] over an arbitrary `(doc_id, text)` frame — public so
-    * specs can stress band-bucket fan-out on synthetic skewed corpora. */
+  /** [[minhashPairs]] over an arbitrary `(doc_id, text)` frame, unordered
+    * (its callers join or collect it to a set; a global sort would cost
+    * them a sampling job and a range shuffle) — public so specs can
+    * stress band-bucket fan-out on synthetic skewed corpora. */
   def minhashPairsOn(s: SparkSession, rawDocs: DataFrame, threshold: Double): DataFrame = {
     import s.implicits._
     val (bands, fingerprints) = lshIndex(s, rawDocs)
@@ -351,7 +358,6 @@ object MinHashDedup {
       .select($"x.doc_id".as("a_id"), $"y.doc_id".as("b_id"))
       .distinct()
     rerank(candidates, fingerprints, threshold)
-      .orderBy($"jaccard_dist", $"a_id", $"b_id")
   }
 
   /** d12's batch-vs-corpus candidate generation + rerank over an arbitrary

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Word-3-gram shingling shared by d2 and d4.
+/** Word-n-gram shingling shared by d2, d4/d12 (via lshIndex), d6 and t26.
   *
   * Deliberately a typed flatMap, not HOF column expressions: Spark's
   * higher-order functions (transform/aggregate) are CodegenFallback —
@@ -15,7 +15,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Shingles {
 
-  private def shingleSet(text: String, n: Int): java.util.LinkedHashSet[String] = {
+  /** The distinct n-grams of one text, in first-seen order; MinHash's
+    * LSH index (MinHashDedup.lshIndex) derives its band minima and
+    * fingerprints from this set inside its own typed map. */
+  private[operators] def shingleSet(text: String, n: Int): java.util.LinkedHashSet[String] = {
     val seen = new java.util.LinkedHashSet[String]()
     // null text contributes no shingles — the oracle's unnest(NULL) yields
     // no rows, and the old column form dropped the row the same way
@@ -65,14 +68,5 @@ object Shingles {
           }
         }
       }.toDF("doc_id", "shingle")
-  }
-
-  /** Set-per-doc form: (doc_id, toks array), empty-shingle docs dropped. */
-  def sets(spark: SparkSession, docs: DataFrame): DataFrame = {
-    import spark.implicits._
-    docs.select($"doc_id", $"text").as[(Long, String)]
-      .map { case (id, text) => (id, shingleSet(text, 3).toArray(Array.empty[String])) }
-      .filter(_._2.nonEmpty)
-      .toDF("doc_id", "toks")
   }
 }

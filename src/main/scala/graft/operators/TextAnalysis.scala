@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{QuerySpec, Tables}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -36,6 +37,69 @@ object TextAnalysis {
     s"list_reduce(list_prepend(CAST(0 AS BIGINT), " +
       s"list_transform(generate_series(1, length($col)), i -> CAST(ascii(substring($col, i, 1)) AS BIGINT))), " +
       s"(acc, x) -> (acc * 31 + x) % 2147483647)"
+
+  /** t6's Gopher metrics of one text as `(mean_word_len, frac_numeric,
+    * frac_short, keep)`, or None for null text (every column then null,
+    * as the column form gives under ANSI). One pass over the chars, no
+    * token strings. It reproduces the column form it replaced (pinned by
+    * GopherFlagsProps; the DuckDB oracle pins the values) on valid UTF-8:
+    *  - tokens are `trim(text)` (U+0020 only) split on Java `\s+` with
+    *    limit −1, so leading/trailing empty tokens count and "" is one
+    *    empty token;
+    *  - `n_nonspace` is the code points of the untrimmed text minus its
+    *    `\s` chars ([ \t\n\x0B\f\r]);
+    *  - a token is numeric when `^[0-9]+$` `find()`s in it; `$` also
+    *    matches before one final U+0085/U+2028/U+2029 (the other line
+    *    terminators are `\s`, so they never sit inside a token);
+    *  - a token is short when it has at most 2 code points. */
+  private[operators] def gopherFlags(text: String): Option[(Double, Double, Double, Boolean)] = {
+    if (text == null) return None
+    def isSpace(c: Char) = c == ' ' || (c >= '\t' && c <= '\r')
+    def isLineEnd(c: Char) = c == '\u0085' || c == '\u2028' || c == '\u2029'
+    val n = text.length
+    var nonSpace = text.codePointCount(0, n)
+    var i = 0
+    while (i < n) { if (isSpace(text.charAt(i))) nonSpace -= 1; i += 1 }
+    var b = 0
+    var e = n
+    while (b < e && text.charAt(b) == ' ') b += 1
+    while (e > b && text.charAt(e - 1) == ' ') e -= 1
+    var nTok, nNum, nShort = 0L
+    var start = b
+    i = b
+    var more = true
+    while (more) {
+      if (i == e || isSpace(text.charAt(i))) {
+        val len = i - start
+        if (len <= 2 || (len <= 4 && text.codePointCount(start, i) <= 2)) nShort += 1
+        var k = start
+        while (k < i && text.charAt(k) >= '0' && text.charAt(k) <= '9') k += 1
+        if (k > start && (k == i || k == i - 1 && isLineEnd(text.charAt(k)))) nNum += 1
+        nTok += 1
+        if (i == e) more = false
+        else {
+          while (i < e && isSpace(text.charAt(i))) i += 1
+          start = i
+        }
+      } else i += 1
+    }
+    val meanWordLen = nonSpace.toDouble / nTok
+    val fracNumeric = nNum.toDouble / nTok
+    Some((meanWordLen, fracNumeric, nShort.toDouble / nTok,
+      nTok >= 50 && nTok <= 100000 && meanWordLen >= 3 && meanWordLen <= 10 && fracNumeric < 0.2))
+  }
+
+  /** t6's rows, unordered, for a `(doc_id, text)` frame: [[gopherFlags]]
+    * per document in one typed map. */
+  private[operators] def gopherQuality(docs: DataFrame): DataFrame = {
+    import docs.sparkSession.implicits._
+    docs.select($"doc_id", $"text").as[(Long, String)]
+      .map { case (id, text) =>
+        val f = gopherFlags(text)
+        (id, f.map(_._1), f.map(_._2), f.map(_._3), f.map(_._4))
+      }
+      .toDF("doc_id", "mean_word_len", "frac_numeric", "frac_short", "keep")
+  }
 
   private val stopwords = Seq("the", "a", "of", "and", "to", "in", "is", "on")
   private val stopwordsSqlList = stopwords.map(s => s"'$s'").mkString(", ")
@@ -167,29 +231,15 @@ object TextAnalysis {
     // Gopher-style heuristic quality flags (Rae et al. 2021 §A1.1 /
     // Dolma's rule filters): mean word length, numeric-token fraction,
     // short-token fraction, and the composite keep/drop decision. Single
-    // scan, fully columnar; at 100 TB this is the map-side filter that
-    // runs BEFORE any shuffle-heavy dedup.
+    // scan; at 100 TB this is the map-side filter that runs BEFORE any
+    // shuffle-heavy dedup. The per-token counting is one typed map
+    // (gopherFlags): HOF filters over split tokens are CodegenFallback,
+    // interpreted once per token.
     QuerySpec(
       "t6_gopher_quality_flags",
       (s, dir) => {
         import s.implicits._
-        Tables(s, dir, "documents")
-          .withColumn("toks", split(trim($"text"), "\\s+"))
-          .withColumn("n_tok", size($"toks").cast("long"))
-          .withColumn("n_nonspace", length(regexp_replace($"text", "\\s", "")).cast("long"))
-          .withColumn("n_num",
-            size(expr("filter(toks, t -> t RLIKE '^[0-9]+$')")).cast("long"))
-          .withColumn("n_short",
-            size(expr("filter(toks, t -> length(t) <= 2)")).cast("long"))
-          .withColumn("mean_word_len", $"n_nonspace".cast("double") / $"n_tok")
-          .withColumn("frac_numeric", $"n_num".cast("double") / $"n_tok")
-          .withColumn("frac_short", $"n_short".cast("double") / $"n_tok")
-          .select(
-            $"doc_id", $"mean_word_len", $"frac_numeric", $"frac_short",
-            ($"n_tok" >= 50 && $"n_tok" <= 100000 &&
-              $"mean_word_len" >= 3 && $"mean_word_len" <= 10 &&
-              $"frac_numeric" < 0.2).as("keep"))
-          .orderBy($"doc_id")
+        gopherQuality(Tables(s, dir, "documents")).orderBy($"doc_id")
       },
       Some(raw"""
         WITH t AS (

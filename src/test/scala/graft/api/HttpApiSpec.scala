@@ -81,6 +81,25 @@ class HttpApiSpec extends SparkTestBase {
     sock
   }
 
+  test("JSON escaping: one pass, same output as the per-char form, input returned when clean") {
+    // the per-char form it replaced, as the reference
+    def perChar(s: String): String = s.flatMap {
+      case '"' => "\\\""
+      case '\\' => "\\\\"
+      case '\n' => "\\n"
+      case '\r' => "\\r"
+      case '\t' => "\\t"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"
+      case c => c.toString
+    }
+    val cases = Seq("", "plain ascii", "say \"hi\"", "C:\\path\\to", "a\nb\rc\td",
+      (0 until 32).map(_.toChar).mkString, "\u007f\u0080 \u00e9t\u00e9 \u4e2d\u6587 \uD83D\uDE00",
+      "mixed \"\u0001\\\n\u001f\u00ff end", "\u0000")
+    cases.foreach(c => assert(HttpApi.esc(c) == perChar(c), c.map(_.toInt)))
+    val clean = "aGVsbG8gd29ybGQ=" * 100
+    assert(HttpApi.esc(clean) eq clean)
+  }
+
   test("multipart parser: parts, filenames, binary-safe bodies") {
     val body = multipart(
       ("document", "a.md", "# Hi\r\nbody".getBytes(StandardCharsets.UTF_8)),
@@ -301,6 +320,53 @@ class HttpApiSpec extends SparkTestBase {
       assert((img.getWidth, img.getHeight) == ((graft.kernel.ImageRenderer.PictureBaseW * 2,
         graft.kernel.ImageRenderer.PictureBaseH * 2)), body)
     } finally restarted.stop()
+  }
+
+  test("finished jobs expire after 24 h, swept on the worker after a job at most hourly") {
+    import java.nio.file.{Files, Paths}
+    import java.nio.file.attribute.FileTime
+    val root = java.nio.file.Files.createTempDirectory("graft_api_sweep").toString
+    val ledger = new graft.jobs.JobService.Ledger(root)
+    val md = Seq(("a.md", "# A".getBytes(StandardCharsets.UTF_8)))
+    def results(id: String) = Paths.get(root, "results", id, "results.jsonl")
+    def backdate(id: String, hours: Long): Unit = Files.setLastModifiedTime(results(id),
+      FileTime.fromMillis(System.currentTimeMillis() - hours * 60 * 60 * 1000))
+    def exists(id: String) =
+      Files.exists(Paths.get(root, "requests", id)) || Files.exists(Paths.get(root, "results", id))
+    val stale = ledger.submit(md, batch = false)
+    ledger.process(spark, stale)
+    backdate(stale, 25)
+    val fresh = ledger.submit(md, batch = false)
+    ledger.process(spark, fresh)
+    backdate(fresh, 23)
+    // accepted by an earlier server, processed when this one starts
+    val pending = ledger.submit(md, batch = false)
+    val srv = new HttpApi.Server(spark, 0, root).start()
+    def jobDone(id: String): Unit = {
+      val deadline = System.currentTimeMillis() + 30000
+      while (!Files.exists(results(id)) && System.currentTimeMillis() < deadline) Thread.sleep(50)
+      assert(Files.exists(results(id)), s"job $id never completed")
+    }
+    // one job through the worker queue: it runs after the start-up drain
+    // and its sweep, so both are done once its results exist
+    def oneJob(): Unit = {
+      val body = client.send(HttpRequest.newBuilder(URI.create(
+        s"http://127.0.0.1:${srv.boundPort}/conversion-jobs"))
+        .header("Content-Type", s"multipart/form-data; boundary=$Boundary")
+        .POST(HttpRequest.BodyPublishers.ofByteArray(multipart(("document", "b.md", md.head._2))))
+        .build(), HttpResponse.BodyHandlers.ofString()).body()
+      jobDone(""""job_id":"([0-9a-f-]+)"""".r.findFirstMatchIn(body).get.group(1))
+    }
+    try {
+      jobDone(pending)
+      oneJob()
+      assert(!exists(stale), "a job completed 25 h ago must be swept")
+      assert(exists(fresh) && exists(pending), "jobs younger than 24 h must stay")
+      // the next sweep is an hour away: a job expiring now waits for it
+      backdate(fresh, 25)
+      oneJob()
+      assert(exists(fresh), "the worker swept again within the hour")
+    } finally srv.stop()
   }
 
   test("health probes") {

@@ -160,6 +160,18 @@ class ConvertKernelSpec extends AnyFunSuite {
         "- [rel item](/rel)\n- plain", r.markdown)
   }
 
+  test("html with 16,000 unclosed <script> or <!-- openers converts in linear time") {
+    // a regex strip re-scans from every unclosed opener to the end of
+    // input: quadratic, ~13 s per case on a 4-core box
+    for ((opener, name) <- Seq(("<script>x", "scripts.html"), ("<!--x", "comments.html"))) {
+      val t0 = System.nanoTime()
+      val r = convertOne(name, b(opener * 16000))
+      val secs = (System.nanoTime() - t0) / 1e9
+      assert(r.error == null, s"$name: ${r.error}")
+      assert(secs < 2.0, f"$name took $secs%.1f s")
+    }
+  }
+
   test("html lists convert to markdown bullets / numbered items") {
     val src = "<p>Before.</p><ul><li>alpha</li><li>beta</li></ul>" +
       "<ol><li>first</li><li>second</li></ol><p>After.</p>"

@@ -6,8 +6,9 @@ import graft.SparkTestBase
   * cached intermediates, relying on Verify/Bench calling clearCache — a
   * long-lived session (the HttpApi server, a notebook) accumulated
   * cached RDDs across queries. Every persist is now paired with a
-  * release inside the query function (graft.Materialize.thenRelease /
-  * lshIndex's internal unpersist), which this spec pins by running the
+  * release inside the query function (graft.Materialize.thenRelease;
+  * lshIndex persists nothing, its one typed pass is a localCheckpoint
+  * with no cache-manager entry), which this spec pins by running the
   * persisting queries back-to-back THROUGH THE PUBLIC API, materializing
   * each, and asserting the cache manager is empty — no clearCache
   * anywhere in the loop.

@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
@@ -132,6 +133,51 @@ class DedupStressSpec extends SparkTestBase {
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs == expectedPairs,
       s"rerank must kill hot-band false candidates, got ${pairs.size} pairs")
+  }
+
+  /** lshIndex as it was built before its one typed pass, kept as the
+    * reference: a persisted `array<string>` of each document's distinct
+    * shingles, a typed flatMap for the band minima and a HOF
+    * `transform(toks, t -> xxhash64(t))` for the fingerprints. */
+  private def twoPassLshIndex(docs: DataFrame) = {
+    import MinHashDedup.{NumBands, P, coefA, coefB}
+    val sets = docs.select($"doc_id", $"text").as[(Long, String)]
+      .map { case (id, text) => (id, Shingles.shingleSet(text, 3).toArray(Array.empty[String])) }
+      .filter(_._2.nonEmpty)
+      .toDF("doc_id", "toks")
+    val bands = sets.as[(Long, Seq[String])].flatMap { case (id, toks) =>
+      val mins = Array.fill(NumBands)(Long.MaxValue)
+      toks.foreach { t =>
+        val x = scala.util.hashing.MurmurHash3.stringHash(t, 0x9747b28c).toLong & 0x7FFFFFFFL
+        for (i <- 0 until NumBands) mins(i) = math.min(mins(i), (coefA(i) * x + coefB(i)) % P)
+      }
+      (0 until NumBands).map(i => (id, i, mins(i)))
+    }.toDF("doc_id", "band", "hv")
+    val fingerprints = sets.select($"doc_id",
+      array_sort(expr("transform(toks, t -> xxhash64(t))")).as("hs"))
+    (bands, fingerprints)
+  }
+
+  private def assertLshIndexMatchesTwoPass(docs: DataFrame): Unit = {
+    val (bands, fps) = MinHashDedup.lshIndex(spark, docs)
+    val (wantBands, wantFps) = twoPassLshIndex(docs)
+    assert(bands.schema == wantBands.schema && fps.schema == wantFps.schema)
+    def bandRows(df: DataFrame) =
+      df.as[(Long, Int, Long)].collect().toSeq.sorted
+    def fpRows(df: DataFrame) =
+      df.as[(Long, Seq[Long])].collect().toSeq.sortBy(_._1)
+    val got = bandRows(bands)
+    assert(got.nonEmpty && got == bandRows(wantBands), "band rows differ from the two-pass form")
+    assert(fpRows(fps) == fpRows(wantFps), "fingerprints differ from the two-pass form")
+  }
+
+  test("lshIndex's one typed pass equals the two-pass form on the skewed corpus") {
+    assertLshIndexMatchesTwoPass(skewedDocs)
+  }
+
+  test("lshIndex's one typed pass equals the two-pass form on sf0.01") {
+    val sf001 = new java.io.File(new java.io.File(sfDir).getParentFile, "sf0.01").getPath
+    assertLshIndexMatchesTwoPass(graft.Tables(spark, sf001, "documents"))
   }
 
   test("d12 incremental minhash finds exactly the planted batch-vs-corpus near-dups") {
